@@ -1,0 +1,7 @@
+"""Self-tests of the benchmark's own logic: ``python3 -m pytest perfbench/tests``."""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(HERE), os.path.dirname(os.path.dirname(HERE))]
