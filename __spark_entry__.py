@@ -1167,7 +1167,7 @@ def _embedding_near_dup(spark, sf_dir):
     # driver-conditions A/B (fresh process per rep, vanilla bench
     # session, median-of-3, probe-gated) measured the flip LOSING at
     # both core counts — on/off 2.10 at 32 cores, 1.27 at 8
-    # (tools/ab_driver_cond.py) — reproducing the driver's r11 cold-run
+    # (OPTIMIZATION_r12.md Change 2) — reproducing the driver's r11 cold-run
     # regression that the r11 in-session A/B missed. The exchange
     # shuffles the heavy 64-float embedding payload (guide §2.3) and
     # splits the corpus into 32 tiny Arrow batches for the one matmul
@@ -1198,7 +1198,7 @@ def _semantic_dedup_survivors(spark, sf_dir):
     # starved-scan repartition REVERTED (r12): same payload-shuffle
     # class as _embedding_near_dup above — driver-conditions A/B
     # on/off 1.27 at 32 cores, on > off in 3/3 reps
-    # (tools/ab_driver_cond.py; the r11 in-session 0.43 was warm-cache
+    # (OPTIMIZATION_r12.md Change 2; the r11 in-session 0.43 was warm-cache
     # confounded like its sibling)
     emb = _t(spark, sf_dir, "embeddings")
     return S.semantic_dedup(emb, threshold=_NEAR_DUP_COS).select("vec_id")
@@ -1283,7 +1283,7 @@ def _ivf_ann_exactprobe(spark, sf_dir):
     # under test here — random init skips k-means||'s ~2 extra full
     # passes (measured interleaved at sf0.1: train 1.2-1.7 s -> 0.9-1.2 s),
     # and every Lloyd iteration beyond the first only improves centroids
-    # the contract provably ignores (tools/ab_ivf_iters.py: identity
+    # the contract provably ignores (OPTIMIZATION_r11.md Change 8: identity
     # holds, 0.90-0.95x across two 7-rep interleaved batches; one
     # iteration still exercises assign+update end-to-end)
     cents = S.train_ivf_centroids(emb, n_cells=4, max_iter=1, init_mode="random")
@@ -1319,7 +1319,7 @@ def _lsh_ann_pairs(spark, sf_dir):
     threshold boundary, and recall_ok compares against the 0.8 bound
     with ~20 points of slack, so the RESULT row is unchanged
     (identity-asserted old vs new at sf0.001/0.01/0.1 before adoption;
-    tools/ab_lsh_ann.py). ``lsh_near_dup_pairs`` itself — the actual
+    OPTIMIZATION_r12.md Change 1). ``lsh_near_dup_pairs`` itself — the actual
     near-dup scale operator — is unchanged and stays property-tested.
     The r11 starved-scan repartition was also dropped here: under the
     new shape it is a wash (driver-conditions on/off 0.998), and a
@@ -2509,7 +2509,7 @@ def _chain_components_robust(spark, sf_dir):
     so subsetting by user keeps every component intact while keeping
     the oracle's transitive closure small. Identical (node, comp)
     semantics to the default mode is ALSO property-tested
-    (test_connected_components_star_equals_min_label); this query gets
+    (test_connected_components_star_matches_union_find); this query gets
     the driver to grade the robust plan itself."""
     from yaetos_spark.operators.graph import connected_components_star
 
@@ -5439,9 +5439,9 @@ _VERIFY_NEXT: dict[str, int] = {
     # deterministic winner) — the r8 verdict describes the old plan.
     "latest_events": 9,
     # r11: connected_components_star's iteration loop was restructured
-    # for the checkpoint-cadence A/B (_ckpt_every/_round_log
-    # diagnostics; default path produces the identical plan, but the
-    # loop code the r10 verdict graded no longer exists verbatim).
+    # for the checkpoint-cadence A/B (diagnostics since removed; the
+    # default path produced the identical plan, but the loop code the
+    # r10 verdict graded no longer exists verbatim).
     # Forcing the r10-cohort query displaces one of r11's two
     # opportunistic age-2 pre-pulls — r12 demand stays 49 <= 50
     # (check_capacity verifies at manifest build).

@@ -1,3 +1,4 @@
+import shutil
 import sys
 
 import yaml
@@ -117,6 +118,10 @@ def test_cli_new_scaffolds_runnable_project(spark, tmp_path, monkeypatch):
     out_dirs = list((proj / "output" / "events_per_type").iterdir())
     assert len(out_dirs) == 1
     assert spark.read.parquet(str(out_dirs[0])).count() > 0
+    # the chained run below writes events_per_type again under a
+    # one-second {{now}} stamp: clear this run's output so two runs
+    # inside the same second don't collide on PATH_ALREADY_EXISTS
+    shutil.rmtree(proj / "output" / "events_per_type")
 
     # chained python job: the scaffolded `jobs` package must shadow the
     # repo's own `jobs` package for the duration of the run

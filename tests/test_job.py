@@ -79,6 +79,24 @@ def test_pk_gate_fails(spark, tmp_path):
         job.etl(spark)
 
 
+def test_library_has_no_assert_statements():
+    """Gates must survive ``python -O``, which strips ``assert``
+    statements: the library raises explicitly instead. Parsed with
+    ``ast``, so asserts inside string literals (scaffold templates)
+    don't count."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "yaetos_spark"
+    found = [
+        f"{path.relative_to(pkg.parent)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not found, f"assert statements vanish under python -O: {found}"
+
+
 def test_sql_file_job(spark, tmp_path):
     sql = tmp_path / "job.sql"
     sql.write_text(

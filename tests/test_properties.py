@@ -599,6 +599,31 @@ def _edge_case(draw):
     return n_nodes, edges
 
 
+def _union_find_labels(n_nodes, edge_list):
+    """(node -> min node id of its component) over the nodes touched by
+    ``edge_list``, by sequential union-find."""
+    parent = list(range(n_nodes))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    touched = {x for e in edge_list for x in e}
+    expect = {}
+    for root in set(find(x) for x in touched):
+        members = [x for x in touched if find(x) == root]
+        label = min(members)
+        for x in members:
+            expect[x] = label
+    return expect
+
+
 @given(_edge_case())
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
 def test_connected_components_matches_union_find(spark, case):
@@ -613,28 +638,7 @@ def test_connected_components_matches_union_find(spark, case):
         return  # operator's domain: nodes appearing in edges
     edges = spark.createDataFrame(edge_list, "id1 long, id2 long")
     got = {r.node: r.comp for r in connected_components(edges).collect()}
-
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edge_list:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    touched = {x for e in edge_list for x in e}
-    # canonical label = min node id in the component
-    expect = {}
-    for root in set(find(x) for x in touched):
-        members = [x for x in touched if find(x) == root]
-        label = min(members)
-        for x in members:
-            expect[x] = label
-    assert got == expect
+    assert got == _union_find_labels(n_nodes, edge_list)
 
 
 @given(_edge_case())
@@ -643,93 +647,29 @@ def test_connected_components_star_matches_union_find(spark, case):
     """The large-star/small-star variant must produce exactly the same
     (node, comp) map as sequential union-find — including on pure
     self-loop graphs (star contraction must not drop a node whose only
-    edges are self-loops) and long chains (its O(log n) specialty)."""
+    edges are self-loops) and long chains (its O(log n) specialty).
+    Checked three ways: as given; round-robin scattered over 7
+    partitions, so almost every component spans partitions (worst case
+    for the per-partition local contraction, whose stars the global
+    loop must stitch); and with the skew_robust phases (partial-agg
+    groupBy + join instead of whole-group windows)."""
     from yaetos_spark.operators.graph import connected_components_star
 
     n_nodes, edge_list = case
     if not edge_list:
         return
     edges = spark.createDataFrame(edge_list, "id1 long, id2 long")
-    got = {r.node: r.comp for r in connected_components_star(edges).collect()}
-
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edge_list:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    touched = {x for e in edge_list for x in e}
-    expect = {}
-    for root in set(find(x) for x in touched):
-        members = [x for x in touched if find(x) == root]
-        label = min(members)
-        for x in members:
-            expect[x] = label
-    assert got == expect
-
-
-@given(_edge_case())
-@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
-def test_connected_components_star_equals_min_label(spark, case):
-    """The two CC formulations are interchangeable implementations of
-    one contract: on ANY graph, large-star/small-star contraction must
-    emit exactly the (node, comp) map min-label propagation emits —
-    so callers can pick by graph diameter without a semantics change."""
-    from yaetos_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    n_nodes, edge_list = case
-    if not edge_list:
-        return
-    edges = spark.createDataFrame(edge_list, "id1 long, id2 long")
-    star = {r.node: r.comp for r in connected_components_star(edges).collect()}
-    minlabel = {r.node: r.comp for r in connected_components(edges).collect()}
-    assert star == minlabel
-    # the skew_robust phases (partial-agg groupBy + join instead of
-    # whole-group windows) are a pure physical-plan swap — identical
-    # (node, comp) map on any graph
-    robust = {
-        r.node: r.comp
-        for r in connected_components_star(edges, skew_robust=True).collect()
-    }
-    assert robust == star
-
-
-@given(_edge_case())
-@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
-def test_connected_components_star_local_contract_invariant(spark, case):
-    """The r12 per-partition local contraction is a pure physical
-    optimization: (node, comp) must be IDENTICAL with local_contract
-    on and off, and invariant to how edges are scattered across
-    partitions (components spanning many partitions must be stitched
-    by the global loop exactly as before)."""
-    from yaetos_spark.operators.graph import connected_components_star
-
-    n_nodes, edge_list = case
-    if not edge_list:
-        return
-    edges = spark.createDataFrame(edge_list, "id1 long, id2 long")
-    base = {
-        r.node: r.comp
-        for r in connected_components_star(edges, local_contract=False).collect()
-    }
-    on = {r.node: r.comp for r in connected_components_star(edges).collect()}
-    assert on == base
-    # adversarial scatter: round-robin over many partitions so almost
-    # every component spans partitions (worst case for the contraction)
-    scattered = edges.repartition(7)
-    on_scattered = {
-        r.node: r.comp for r in connected_components_star(scattered).collect()
-    }
-    assert on_scattered == base
+    expect = _union_find_labels(n_nodes, edge_list)
+    for label, g, robust in [
+        ("as_given", edges, None),
+        ("scattered", edges.repartition(7), None),
+        ("skew_robust", edges, True),
+    ]:
+        got = {
+            r.node: r.comp
+            for r in connected_components_star(g, skew_robust=robust).collect()
+        }
+        assert got == expect, label
 
 
 def test_connected_components_star_skew_robust_on_stars(spark):
@@ -767,34 +707,6 @@ def test_connected_components_star_long_chain(spark):
     )
     got = {r.node: r.comp for r in connected_components_star(edges).collect()}
     assert got == {i: 0 for i in range(64)}
-
-
-def test_connected_components_star_ckpt_cadence_identical(spark):
-    """The _ckpt_every diagnostic knob (r11 checkpoint-cadence A/B)
-    must not change results: persist-instead-of-checkpoint rounds are
-    a lineage/materialization strategy, not a semantic one. Also
-    pins the _round_log shape the profiling tool reads."""
-    from yaetos_spark.operators.graph import connected_components_star
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(63) if i != 31] + [(100, 100)],
-        "id1 long, id2 long",
-    )
-    base = {(r.node, r.comp) for r in connected_components_star(edges).collect()}
-    log: list = []
-    alt = {
-        (r.node, r.comp)
-        for r in connected_components_star(
-            edges, _ckpt_every=2, _round_log=log
-        ).collect()
-    }
-    assert alt == base
-    assert len(log) >= 2
-    assert {e["mode"] for e in log} == {"persist", "checkpoint"}
-    assert all(
-        {"round", "n_edges", "sec_materialize", "sec_probe", "robust"} <= set(e)
-        for e in log
-    )
 
 
 @given(_edge_case())
@@ -1653,13 +1565,13 @@ def test_normalize_text_fused_regex_equals_two_pass(spark, texts):
     assert bad == 0
 
 
-def test_connected_components_star_auto_switch(spark):
+def test_connected_components_star_auto_switch(spark, monkeypatch):
     """The default auto mode (skew_robust=None) must produce the exact
     union-find map whether the degree switch fires (tiny threshold —
     robust phases from round 1), never fires (huge threshold — window
     phases throughout), or fires MID-RUN (a chain whose late-round
     contraction concentrates everything on the root)."""
-    from yaetos_spark.operators.graph import connected_components_star
+    from yaetos_spark.operators import graph
 
     hub = spark.createDataFrame(
         [(0, i) for i in range(1, 120)], "id1 long, id2 long"
@@ -1672,12 +1584,8 @@ def test_connected_components_star_auto_switch(spark):
         (chain, {i: 0 for i in range(64)}),
     ]:
         for thresh in (3, 10**9):
-            got = {
-                r.node: r.comp
-                for r in connected_components_star(
-                    g, skew_switch_degree=thresh
-                ).collect()
-            }
+            monkeypatch.setattr(graph, "SKEW_SWITCH_DEGREE", thresh)
+            got = {r.node: r.comp for r in graph.connected_components_star(g).collect()}
             assert got == expect, thresh
 
 

@@ -704,6 +704,30 @@ def test_gopher_filter_rules(spark):
     assert "Exchange" not in plan
 
 
+def test_gopher_filter_zero_word_documents(spark):
+    """Empty and whitespace-only documents have zero words: the per-word
+    ratio rules must fail them rather than divide by zero (an ANSI
+    DIVIDE_BY_ZERO would fail the whole job for one such document)."""
+    from yaetos_spark.operators.curation import gopher_filter
+
+    docs = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "one two three four five six seven eight nine ten")],
+        "doc_id long, text string",
+    )
+    out = {
+        r.doc_id: r
+        for r in gopher_filter(
+            docs, min_words=0, max_top_word_frac=0.5, max_dup_bigram_frac=0.5,
+        ).collect()
+    }
+    for doc_id in (1, 2):
+        r = out[doc_id]
+        assert r.n_words == 0 and r.ok_n_words
+        assert r.ok_top_word is False and r.ok_word_len is False
+        assert r.passes is False
+    assert out[3].passes
+
+
 def test_quantize_embeddings_roundtrip_and_bound(spark):
     from pyspark.sql import functions as F
 

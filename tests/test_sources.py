@@ -303,19 +303,39 @@ def test_db_extractor_credentials_and_gates(tmp_path):
         query_salesforce("SELECT Id FROM Account", "sf", str(cfg))
 
 
-def test_git_lineage_in_metadata_sidecar(spark, tmp_path):
+def test_git_lineage_in_metadata_sidecar(spark, tmp_path, monkeypatch):
+    import subprocess
+
     from yaetos_spark.git_utils import get_git_config
     from yaetos_spark.sources.writers import save_output
 
-    cfg = get_git_config("/root/repo")
-    assert cfg and len(cfg["commit"]) == 40  # repo itself is a git repo
     assert get_git_config(str(tmp_path)) is None  # non-repo → None, no raise
 
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    (repo / "job.py").write_text("x = 1\n")
+
+    def git(*args):
+        return subprocess.check_output(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@example.com",
+             "-c", "commit.gpgsign=false", *args],
+            cwd=repo, text=True,
+        ).strip()
+
+    git("init", "-q")
+    git("add", "job.py")
+    git("commit", "-q", "-m", "init")
+    commit = git("rev-parse", "HEAD")
+    cfg = get_git_config(str(repo))
+    assert cfg["commit"] == commit and cfg["is_dirty"] is False
+
+    # the sidecar records the git state of the launch directory
+    monkeypatch.chdir(repo)
     df = spark.createDataFrame([(1,)], "id int")
     out = str(tmp_path / "out")
     save_output(df, {"path": out, "type": "parquet", "save_metadata": True})
     meta = (tmp_path / "out" / "_metadata.txt").read_text()
-    assert "git_commit: " in meta and "job_name:" in meta
+    assert f"git_commit: {commit}" in meta and "job_name:" in meta
 
 
 def test_redshift_query_only_spec():

@@ -177,8 +177,8 @@ class SparkJob:
         if not self.params.get("no_fw_cache"):
             output = output.persist()
         pks = self.output_pks()
-        if pks:
-            assert check_pk(output, pks), f"primary key {pks} not unique in {self.job_name} output"
+        if pks and not check_pk(output, pks):
+            raise AssertionError(f"primary key {pks} not unique in {self.job_name} output")
         rules = self.params.get("expectations")
         if rules:
             from yaetos_spark.operators.quality import run_expectations

@@ -666,10 +666,13 @@ def gopher_filter(
     the doc; duplicate-bigram fraction <= max_dup_bigram_frac (absent
     bigrams pass); mean word length in [min_avg_word_len,
     max_avg_word_len].  All signals are exact integer/rational
-    arithmetic on token arrays — reproducible in any engine."""
+    arithmetic on token arrays — reproducible in any engine.  A
+    zero-word (empty or whitespace-only) document fails the per-word
+    ratio rules instead of dividing by zero."""
 
     def verdicts(t: Column) -> Column:
         n_words = F.size(t)
+        has_words = n_words > 0
         max_count = F.array_max(
             F.transform(
                 F.array_distinct(t), lambda w: F.size(F.filter(t, lambda x: x == w))
@@ -685,9 +688,13 @@ def gopher_filter(
         return F.struct(
             n_words.alias("n_words"),
             n_words.between(min_words, max_words).alias("ok_n_words"),
-            ((max_count / n_words) <= max_top_word_frac).alias("ok_top_word"),
+            F.when(has_words, (max_count / n_words) <= max_top_word_frac)
+            .otherwise(False)
+            .alias("ok_top_word"),
             F.coalesce(dup_bg <= max_dup_bigram_frac, F.lit(True)).alias("ok_dup_bigram"),
-            awl.between(min_avg_word_len, max_avg_word_len).alias("ok_word_len"),
+            F.when(has_words, awl.between(min_avg_word_len, max_avg_word_len))
+            .otherwise(False)
+            .alias("ok_word_len"),
         )
 
     out = df.select(F.col(id_col), _let(_tokens(text_col), verdicts).alias("_v")).select(

@@ -23,13 +23,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# min-label CC truncates its label lineage every this many rounds
+CHECKPOINT_EVERY = 5
+# star-CC degree threshold of the auto skew switch (see
+# connected_components_star's ``skew_robust`` notes)
+SKEW_SWITCH_DEGREE = 5_000_000
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id1",
     dst: str = "id2",
     max_iter: int = 25,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
     component = smallest node id reachable."""
@@ -91,7 +96,7 @@ def connected_components(
         cur_sum = _label_sum(new_labels)
         labels.unpersist()
         labels = new_labels
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             labels = labels.localCheckpoint(eager=True)
         if cur_sum == prev_sum:
             converged = True
@@ -127,7 +132,8 @@ def _local_contract_stars(e: DataFrame) -> DataFrame:
     input (each original edge lives wholly inside its partition's
     star). The global result — comp = min reachable id — is therefore
     invariant to partitioning even though the intermediate star set is
-    not (property-tested against the uncontracted loop and min-label).
+    not (property-tested against union-find on clustered and scattered
+    partitionings).
 
     Why it pays: the contraction loop's round count is driven by
     component DIAMETER AS SEEN BY THE SHUFFLE; input that arrives
@@ -195,10 +201,6 @@ def connected_components_star(
     dst: str = "id2",
     max_iter: int = 50,
     skew_robust: bool | None = None,
-    skew_switch_degree: int = 5_000_000,
-    local_contract: bool = True,
-    _round_log: list | None = None,
-    _ckpt_every: int = 1,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -207,10 +209,16 @@ def connected_components_star(
     needs O(diameter) rounds. Same contract: (node, comp) for every
     node appearing in ``edges``, comp = smallest reachable id.
 
-    When to use which: near-dup clusters have diameter 2-4, so the
-    min-label operator's cheaper rounds win; long-chain graphs (web
-    link graphs, citation chains, river/road networks at 100 TB) have
-    large diameters and this one wins asymptotically.
+    When to use which: each operator wins on its own graph shape.
+    Near-dup clusters are mostly cliques of diameter 1-4, where
+    min-label's seeded first round is already the fixed point; swapping
+    this operator into ``dedup_clusters`` (raw edges checkpointed once,
+    5 interleaved pairs of the perfbench ``corpus_pipeline`` workload on
+    a 4-vCPU host, every run correct) made the ``dedup_documents`` job
+    slower in every pair: medians 3.57 -> 6.35 s cold, 1.91 -> 2.40 s
+    warm. Long-chain graphs (event chains, web link graphs, citation
+    chains) have large diameters, and this one's O(log n) rounds win
+    (``chain_components``; OPTIMIZATION_r12.md Change 3).
 
     Each round is two phases, each one aggregation + one equi-join on
     node keys (the same shuffle shape as a min-label round):
@@ -263,12 +271,12 @@ def connected_components_star(
 
     The DEFAULT (``skew_robust=None``) AUTO-SELECTS per round: when —
     and only when — a generation's edge count reaches
-    ``skew_switch_degree`` (a degree-D group needs >= D edges, so
+    ``SKEW_SWITCH_DEGREE`` (a degree-D group needs >= D edges, so
     smaller generations provably cannot hide a hub and pay NOTHING),
     a bucketed degree detector runs beside the convergence probe
     (4096 hash buckets over the exploded endpoints; map-side combine
     caps its shuffle at 4096 rows per partition), and the first round
-    whose max-bucket-over-mean signal exceeds ``skew_switch_degree``
+    whose max-bucket-over-mean signal exceeds ``SKEW_SWITCH_DEGREE``
     flips every SUBSEQUENT round to the robust phases. Per-round, not a one-shot input probe, because the
     dangerous concentration is EMERGENT: a bounded-degree chain whose
     final component has 10^9 members develops its hub in the late
@@ -278,27 +286,19 @@ def connected_components_star(
     restores the cheaper scalar probe too, for callers that KNOW their
     component sizes are bounded (near-dup clusters, short event chains).
 
-    ``local_contract`` (default True, r12): run the per-partition
-    vectorized CC pass (:func:`_local_contract_stars`) before the
-    distributed loop. Identical (node, comp) output — the loop runs on
-    the star decomposition, whose components are the same — but input
-    that arrives clustered (per-user chains, per-document near-dup
-    groups co-located by an upstream shuffle) contracts locally to
-    depth-1 stars, cutting the O(log diameter) full-volume rounds to
-    the few needed to stitch cross-partition components (measured at
-    the 100x chain replica: 14 rounds → 1, 147→27 s, see OPTIMIZATION_r12.md).
-    False restores the r11 plan exactly.
-
-    Diagnostics (underscore = not part of the operator contract):
-    ``_round_log`` collects one dict per round — edge count plus the
-    phase-materialize vs probe second split — for
-    ``tools/profile_cc_rounds.py``; ``_ckpt_every=k`` truncates
-    lineage with the eager localCheckpoint only every k-th round
-    (persist + count on the others), the r11 A/B knob measuring how
-    much of a round is checkpoint materialization vs shuffle work.
+    Local contraction: the per-partition vectorized CC pass
+    (:func:`_local_contract_stars`) runs before the distributed loop.
+    It leaves the (node, comp) output as is — the loop runs on the star
+    decomposition, whose components are the same — but input that
+    arrives clustered (per-user chains, per-document near-dup groups
+    co-located by an upstream shuffle) contracts locally to depth-1
+    stars, cutting the O(log diameter) full-volume rounds to the few
+    needed to stitch cross-partition components (measured at the 100x
+    chain replica: 14 rounds → 1, 147→27 s, OPTIMIZATION_r12.md
+    Change 3). Checkpointing a generation only every k-th round was
+    measured a wash at 100x and a loss at 10x (COVERAGE.md, round-11
+    checkpoint-cadence A/B), so every round truncates.
     """
-    import time as _time
-
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # domain = every node appearing in edges, INCLUDING ones whose only
     # edges are self-loops (the contraction below drops self-loops, so
@@ -312,12 +312,10 @@ def connected_components_star(
     e = raw.where(F.col("a") != F.col("b")).select(
         F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
     )
-    if local_contract:
-        # one narrow Arrow pass BEFORE the first shuffle; see
-        # _local_contract_stars for the correctness argument. Output is
-        # already canonical (root = component-local min < member).
-        e = _local_contract_stars(e)
-    e = e.distinct().localCheckpoint(eager=True)
+    # one narrow Arrow pass BEFORE the first shuffle; see
+    # _local_contract_stars for the correctness argument. Output is
+    # already canonical (root = component-local min < member).
+    e = _local_contract_stars(e).distinct().localCheckpoint(eager=True)
 
     auto = skew_robust is None
     robust = bool(skew_robust)
@@ -330,7 +328,7 @@ def connected_components_star(
         EVERY mode.  The degree signal (third element, None when not
         computed) runs only in auto mode AND only when the edge count
         could possibly hide a hub: a group of degree D needs at least
-        D edges, so while n < skew_switch_degree NO group can cross
+        D edges, so while n < SKEW_SWITCH_DEGREE NO group can cross
         the threshold and the detector is skipped — sub-threshold
         graphs (every local test, near-dup clusters, sf0.1 chains) pay
         exactly zero for the auto default (an always-on per-node
@@ -342,7 +340,7 @@ def connected_components_star(
         degree D lifts its own bucket ~D above the mean, and hash
         collisions only OVER-estimate — the detector can fire early
         (paying the robust phases' modest premium) but never miss a
-        hub.  At n >= skew_switch_degree its cost is one extra
+        hub.  At n >= SKEW_SWITCH_DEGREE its cost is one extra
         aggregation over a frame the phases are about to shuffle
         several times — noise at that scale."""
         row = frame.agg(
@@ -352,7 +350,7 @@ def connected_components_star(
                 + F.col("hi").cast("decimal(38,0)")
             ).alias("s"),
         ).collect()[0]
-        if not auto or robust or (row.n or 0) < skew_switch_degree:
+        if not auto or robust or (row.n or 0) < SKEW_SWITCH_DEGREE:
             return row.n, row.s, None
         deg = (
             frame.select(F.explode(F.array("lo", "hi")).alias("_nd"))
@@ -368,10 +366,9 @@ def connected_components_star(
     cur = e
     n0, s0, mx0 = _probe(cur)
     prev = (n0, s0)
-    if auto and mx0 is not None and mx0 > skew_switch_degree:
+    if auto and mx0 is not None and mx0 > SKEW_SWITCH_DEGREE:
         robust = True
-    prev_persisted = None
-    for _it in range(max_iter):
+    for _ in range(max_iter):
         # Each phase is a grouped-minimum attached back to the group's
         # rows — expressed as a WINDOW aggregate, not the textbook
         # groupBy + self-join: the window computes min-over-group and
@@ -445,43 +442,11 @@ def connected_components_star(
             .where(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        t0 = _time.time()
-        if (_it + 1) % max(1, _ckpt_every) == 0:
-            # eager: phases execute and the generation lands in block
-            # storage inside this call; lineage truncates here
-            new = gen.localCheckpoint(eager=True)
-            mode = "checkpoint"
-            t_mat = _time.time()
-            n1, s1, mx1 = _probe(new)
-        else:
-            # off-cadence round (_ckpt_every > 1): persist instead —
-            # the probe's aggregate is the materializing action, the
-            # next round reads the cache, and lineage grows by at most
-            # _ckpt_every - 1 rounds before the next truncation
-            new = gen.persist()
-            mode = "persist"
-            t_mat = _time.time()
-            n1, s1, mx1 = _probe(new)
-        t_probe = _time.time()
-        if _round_log is not None:
-            _round_log.append({
-                "round": _it + 1,
-                "n_edges": n1,
-                "mode": mode,
-                "robust": robust,
-                "sec_materialize": round(t_mat - t0, 3),
-                "sec_probe": round(t_probe - t_mat, 3),
-            })
-        # the previous off-cadence generation is no longer referenced
-        # once the new one is materialized (checkpoint) or fully cached
-        # (the probe scanned every partition)
-        if prev_persisted is not None:
-            prev_persisted.unpersist()
-            prev_persisted = None
-        if mode == "persist":
-            prev_persisted = new
-        cur = new
-        if auto and mx1 is not None and mx1 > skew_switch_degree:
+        # eager: phases execute and the generation lands in block
+        # storage inside this call; lineage truncates here
+        cur = gen.localCheckpoint(eager=True)
+        n1, s1, mx1 = _probe(cur)
+        if auto and mx1 is not None and mx1 > SKEW_SWITCH_DEGREE:
             robust = True  # one-way: concentration only grows
         if (n1, s1) == prev:
             converged = True
