@@ -5415,238 +5415,35 @@ GROUP BY from_type, to_type
 # ---------------------------------------------------------------------
 
 
-# Queries whose IMPLEMENTATION changed since their last driver verdict:
-# a fresh verdict describes the old code, so they re-enter the window
-# now regardless of verdict age.  Each entry maps the query to the
-# round whose grading should re-verify it; the entry is SELF-EXPIRING —
-# it forces only while the query's latest PASSING verdict predates that
-# round, so a green re-verdict deactivates it automatically (no manual
-# clearing to forget) and a FAILED re-verdict keeps it forced until it
-# lands green.
-_VERIFY_NEXT: dict[str, int] = {
-    # (r8's three entries — ngram_jaccard_pairs, near_dup_survivors,
-    # minhash_lsh_pairs — all re-verified green in CORRECTNESS_r08 on
-    # the changed code; under the round-keyed scheme they would have
-    # expired by themselves.)
-    #
-    # r9: the two survivor frames are now localCheckpoint'ed so the
-    # within-batch dedup pipeline runs once per batch instead of once
-    # per reference (measured sf0.1 7.87->6.71s, 10x 19.02->17.40s,
-    # identical rows) — the r8 verdict describes the old plan.
-    "incremental_dedup_survivors": 9,
-    # r9: latest_snapshot rewritten from a row_number window to a
-    # map-side-combining max_by aggregate (hot-key safety; same
-    # deterministic winner) — the r8 verdict describes the old plan.
-    "latest_events": 9,
-    # r11: connected_components_star's iteration loop was restructured
-    # for the checkpoint-cadence A/B (diagnostics since removed; the
-    # default path produced the identical plan, but the loop code the
-    # r10 verdict graded no longer exists verbatim).
-    # Forcing the r10-cohort query displaces one of r11's two
-    # opportunistic age-2 pre-pulls — r12 demand stays 49 <= 50
-    # (check_capacity verifies at manifest build).
-    "chain_components": 11,
-    # r9 changed-plan queries NOT forced (window capacity — the r9
-    # window exactly fits the 46-query r6 cohort + 2 verdict-less new
-    # queries + the 2 entries above): winnow_overlap_pairs and
-    # corpus_line_dedup regrade at their natural r10 slot (r7 cohort),
-    # pack_sequences at r11 (r8 cohort); stratified_sample takes r10's
-    # one spare slot via _VERIFY_AT below.  Both-SF oracle re-checks in
-    # COVERAGE.md stand in until then.
-}
-
-# Round-keyed _VERIFY_NEXT: force a changed-code query into the window
-# of ONE specific FUTURE round — for when the upcoming round's window
-# is already exactly full (forcing now would push a stale cohort member
-# past the age bound) but the following round has a spare slot.  Keyed
-# like _DEFER_ONCE: the entry is active only when the upcoming round
-# matches, and inert before/after, so it cannot displace anything in
-# the wrong round and expires by itself once its round passes (the
-# query's old verdict then ages it into the window naturally anyway).
-_VERIFY_AT: dict[str, int] = {
-    # r9: deterministic_sample rewritten as a two-phase sub-bucketed
-    # top-n (hot-stratum safety; identical selection proven by test +
-    # A/B) — the r8 verdict describes the old plan.  The r9 window is
-    # exactly full with the 46-query r6 cohort; r10 carries the
-    # 49-query r7 cohort, leaving one spare slot this takes.
-    # (r10 note: deterministic_sample's helper columns were renamed to
-    # collision-guarded __ds_* names in r10, so the r10 verdict this pin
-    # forces describes the CURRENT code.)
-    "stratified_sample": 10,
-    # r11 pins (VERDICT r9 item 1): the four queries below hold r8
-    # verdicts on plans that changed in r9 — and pack_sequences /
-    # resample_locf changed AGAIN in r10 (NULL-shard routing; NULL-gated
-    # explode guard).  All four sit in the 48-query r8 cohort that
-    # regrades naturally at r11 (2 spare slots), so these pins consume
-    # no extra capacity — they are insurance against any verdict
-    # landing between now and then silently aging them out of the r11
-    # window.
-    "pack_sequences": 11,
-    "resample_locf": 11,
-    "dedup_exact_norm": 11,
-    "scd2_user_types": 11,
-    # r10 shingle NULL-consistency change (ngrams_from_tokens coalesces
-    # NULL token arrays, bcab02b) touched every shingle-derived plan.
-    # The affected r8-cohort queries regrade naturally at r11 and the
-    # r9-cohort ones at r12 — these pins make that explicit and guard
-    # against anything re-grading them earlier on the pre-change plan.
-    # All are inside their naturally-graded cohorts: zero extra
-    # capacity (check_capacity verifies at manifest build).
-    # (dedup_clusters, also shingle-affected, is in the r7 cohort and
-    # sits in the r10 window RIGHT NOW — its r10 verdict grades the
-    # post-change plan, no pin needed.)
-    "ngram_jaccard_pairs": 11,
-    "minhash_lsh_pairs": 11,
-    "near_dup_survivors": 11,
-    # r10: simhash() NULL-text coalesce (same class) — both simhash
-    # queries hold r8 verdicts and sit in the r8 cohort
-    "simhash_docs": 11,
-    "simhash_near_pairs": 11,
-    "incremental_dedup_survivors": 12,
-    "doc_redundancy_scores": 12,
-    # r11 loop restructure (see chain_components in _VERIFY_NEXT):
-    # the robust-phase twin sits in the r9 cohort that regrades
-    # naturally at r12 — zero extra capacity, pure insurance
-    "chain_components_robust": 12,
-    # r11 optimization round: tf_cosine_pairs gained the singleton
-    # join-side prune (df_count >= 2 on the self-join sides; norms
-    # unchanged — identity + oracle verified at sf0.01/sf0.1, see
-    # OPTIMIZATION_r11.md Change 7).  The query holds an r9 verdict on
-    # the old plan and sits in the cohort that regrades naturally at
-    # r12 — zero extra capacity, pure insurance.
-    "tfcosine_doc_pairs": 12,
-    # r11 optimization round: ivf_ann_exactprobe's training changed
-    # twice (Change 4 random init, Change 8 max_iter 1) — the result is
-    # centroid-independent by the probe-all contract (identity + oracle
-    # verified at sf0.01/sf0.1 both times), but the r10 verdict graded
-    # the k-means|| plan's literals.  The query holds an r10 verdict
-    # and regrades naturally at r13 (age bound) — zero extra capacity,
-    # pure insurance.
-    "ivf_ann_exactprobe": 13,
-    # r12 optimization round: connected_components_star gained the
-    # per-partition local contraction (identical (node, comp) output —
-    # property-tested on/off + scattered partitions; digest-equal at
-    # base/10x/100x, see OPTIMIZATION_r12.md Change 3).  The robust
-    # twin regrades in the r12 window already (pin above);
-    # chain_components holds an r11 verdict on the old loop and ages
-    # into the window naturally at r14 (r13 is exactly full with the
-    # 50-query r10/r11 cohort — the capacity check rejects an r13
-    # pin) — zero extra capacity, pure insurance.
-    "chain_components": 14,
-}
-
-
-def _active_verify_next() -> set[str]:
-    """The forced-verify set the rotation and the window manifest use:
-    _VERIFY_NEXT entries whose change-round has no passing verdict yet
-    (self-expiring — see the table's docstring), plus any _VERIFY_AT
-    entry keyed to exactly the upcoming round."""
-    nr = _next_round()
-    last = _last_pass_rounds()
-    active = {n for n, rnd in _VERIFY_NEXT.items() if last.get(n, -1) < rnd}
-    active |= {n for n, rnd in _VERIFY_AT.items() if rnd == nr}
-    return active
-
-# New queries pushed BEHIND the verdict-bearing order for ONE specific
-# round because that round's window must fit a full stalest cohort:
-# maps query name -> the round number in which the deferral applies.
-# The entry EXPIRES BY ITSELF once the corpus moves past that round
-# (the query, still verdict-less, then sorts most-stale and enters the
-# window) — no manual edit needed, and the window-manifest age alarm
-# is only suppressed for the one round the deferral names.
-_DEFER_ONCE: dict[str, int] = {
-    # (r7's incremental_dedup_survivors entry and r8's tfcosine_doc_pairs
-    # / doc_redundancy_scores entries deleted after their first verdicts
-    # landed (r8, r9, r9) — an expired entry is inert, but the table
-    # only carries rows whose query still lacks a verdict.)
-    #
-    # r10: the r10 window is exactly full (49-query r7 cohort +
-    # stratified_sample's _VERIFY_AT pin), so this new query waits one
-    # round and auto-enters the r11 window as a verdict-less query
-    # (r11 demand stays 48 <= 50 — check_capacity verifies).
-    "winnow_rolling_pairs": 10,
-    # r11: the r11 window is full (48 due + chain_components force +
-    # 1 pre-pull), so the new SemDeDup contract query waits one round
-    # and takes r12's single spare slot (r12 demand 49 + 1 = 50 —
-    # check_capacity verifies).
-    "semantic_dedup_survivors": 11,
-}
-
-# Multi-round deferral: a new query that must wait MORE than one round
-# because the next round is already at capacity too.  Maps query name
-# -> the FIRST round it may enter the window; the deferral is active
-# for every earlier round and expires by itself (same self-expiry
-# philosophy as _DEFER_ONCE, keyed by a horizon instead of one round).
-# tools/window_manifest.py's check_capacity knows this table, so an
-# entry whose horizon lands on an over-committed round still fails
-# loudly at manifest build.
-_DEFER_UNTIL: dict[str, int] = {
-    # r11: the corpus' 150th query.  r11 is full (48 due + force +
-    # pre-pull) and r12's demand is exactly 50 (the r9 cohort +
-    # semantic_dedup_survivors), so the new DSIR contract query takes
-    # r13's single spare slot (r13 demand 49 + 1 = 50 — check_capacity
-    # verifies).  At 150 = 3 x 50 the corpus is saturated for the
-    # 50-slot window at max verdict age 2: this is the LAST query that
-    # can be added without retiring one.
-    "dsir_scores": 13,
-}
-
-
-def _next_round() -> int:
-    """The round the NEXT driver grading belongs to = one past the
-    newest committed ``CORRECTNESS_r*.json`` — shared by the rotation
-    and ``tools/window_manifest.py`` so a ``_DEFER_ONCE`` exemption
-    can be keyed to a concrete round and expire automatically."""
-    import glob
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
-
-
-def _active_deferrals() -> set[str]:
-    """Names deferred out of the upcoming round's window: _DEFER_ONCE
-    entries whose deferral round is exactly the upcoming round, plus
-    _DEFER_UNTIL entries whose horizon has not been reached yet.
-    Entries for past (or satisfied-horizon) rounds are inert — expiry
-    is enforced by the round key, not by remembering to delete the
-    entry."""
-    nr = _next_round()
-    out = {n for n, rnd in _DEFER_ONCE.items() if rnd == nr}
-    out |= {n for n, rnd in _DEFER_UNTIL.items() if nr < rnd}
-    return out
-
-
-def _last_pass_rounds() -> dict[str, int]:
-    """Per-query round of the latest PASSING driver verdict, read from
-    the committed ``CORRECTNESS_r*.json`` artifacts next to this file.
-    The single source of truth for rotation — ``tools/window_manifest.py``
-    reuses it so the committed window artifact can never drift from what
-    ``queries()`` actually returns."""
+def _verdict_rounds() -> tuple[int, dict[str, int]]:
+    """One scan of the committed ``CORRECTNESS_r*.json`` artifacts next
+    to this file.  Returns the round the NEXT driver grading belongs to
+    (one past the newest artifact) and, per query, the round of its
+    latest PASSING verdict.  The single source of truth for rotation —
+    ``tools/window_manifest.py`` reuses it so the committed window
+    artifact can never drift from what ``queries()`` actually returns.
+    Unreadable or malformed artifacts still count toward the round but
+    contribute no verdicts."""
     import glob
     import json
     import os
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
+    newest = 0
     last_pass: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
+        newest = max(newest, rnd)
         try:
             with open(path) as f:
                 data = json.load(f)
         except (OSError, ValueError):
             continue
-        results = data.get("queries", data)
+        results = data.get("queries", data) if isinstance(data, dict) else None
         if not isinstance(results, dict):
             continue
         for name, v in results.items():
@@ -5660,7 +5457,7 @@ def _last_pass_rounds() -> dict[str, int]:
             )
             if ok:
                 last_pass[name] = max(last_pass.get(name, 0), rnd)
-    return last_pass
+    return newest + 1, last_pass
 
 
 def _rotate_stalest_first(
@@ -5672,27 +5469,15 @@ def _rotate_stalest_first(
     green").  Staleness is computed from the committed
     ``CORRECTNESS_r*.json`` artifacts next to this file, so the
     rotation is scripted and self-applying every round — no manual
-    reordering to forget.  A query with no verdict yet (new this
-    round), or whose latest verdict FAILED, sorts most-stale and enters
-    the window immediately — unless ``_DEFER_ONCE`` names it FOR THIS
-    specific round, which pushes it BEHIND the verdict-bearing queries
-    (used when a round's window must first fit a full stalest cohort;
-    the deferral expires with the round key, so next round the still
-    verdict-less query auto-enters).  Ties keep the hand-written base
-    order, so the result is fully deterministic given the committed
-    artifacts."""
-    last_pass = _last_pass_rounds()
-    deferred = _active_deferrals()
-    forced = _active_verify_next()
-    pos = {n: i for i, n in enumerate(base)}
-    ordered = sorted(
-        base,
-        key=lambda n: (
-            10**6 if n in deferred and n not in last_pass
-            else (-1 if n in forced else last_pass.get(n, -1)),
-            pos[n],
-        ),
-    )
+    reordering to forget.  A query with no passing verdict at all (new
+    this round, or never green) sorts first.  A query whose latest
+    verdict FAILED sorts by its latest PASSING round like any other
+    (passed r10, failed r12 -> sorts as r10), so it stays in line to
+    re-enter the window.  ``sorted`` is stable, so ties keep the
+    hand-written base order and the result is fully deterministic given
+    the committed artifacts."""
+    _, last_pass = _verdict_rounds()
+    ordered = sorted(base, key=lambda n: last_pass.get(n, -1))
     return {n: base[n] for n in ordered}
 
 
@@ -5703,7 +5488,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the committed CORRECTNESS_r*.json verdicts, so every round the
     # window automatically covers the queries least-recently verified.
     base = {
-        # -- in-window 1-37: round-1-only driver verdicts (stalest) --
         "pricing_summary": _pricing_summary,
         "filter_project": _filter_project,
         "topk_revenue": _topk_revenue,
@@ -5743,10 +5527,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_decode": _multimodal_decode,
         "wordcount_top": _wordcount_top,
         "range_band_join": _range_band_join,
-        # -- in-window 38-39: implementation touched in round 4 --
         "rfm_segments": _rfm_segments,
         "ivf_ann_exactprobe": _ivf_ann_exactprobe,
-        # -- in-window 40-50: round-2-verified fill --
         "correlated_scalar": _correlated_scalar,
         "winnow_overlap_pairs": _winnow_overlap,
         "winnow_rolling_pairs": _winnow_rolling_pairs,
@@ -5759,7 +5541,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantiles_summary": _quantiles_summary,
         "resample_locf": _resample_locf,
         "pagerank_trade_graph": _pagerank_customers,
-        # ---- past the window: round-2-verified remainder (next rotation) ----
         "big_orders": _big_orders,
         "idle_rich_customers": _idle_rich_customers,
         "fuzzy_customer_pairs": _fuzzy_customer_pairs,
@@ -5773,7 +5554,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ntile_price_bands": _ntile_price_bands,
         "orderby_ordinal": _orderby_ordinal,
         "quoted_identifiers": _quoted_identifiers,
-        # ---- round-3-verified (freshest, rotate to the back) ----
         "sessionize_events": _sessionize_events,
         "pack_sequences": _pack_sequences,
         "chunk_sliding_windows": _chunk_sliding_windows,
@@ -5845,24 +5625,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "array_hof_stats": _array_hof_stats,
         "map_functions": _map_functions,
         "unpivot_counts": _unpivot_counts,
-        # ---- new in round 4 (no verdict yet -> sort most-stale, enter window) ----
         "cms_heavy_hitters": _cms_heavy_hitters,
         "boilerplate_prefixes": _boilerplate_prefixes,
         "vocab_tail_stats": _vocab_tail_stats,
         "source_vocab_overlap": _source_vocab_overlap,
         "tfidf_top_terms": _tfidf_top_terms,
         "ppm_pipeline_stats": _ppm_pipeline_stats,
-        # ---- new in round 7 (no verdict yet -> sort most-stale, enter window) ----
         "chain_components": _chain_components,
-        # ---- new in round 7, deferred to the r8 window (_DEFER_ONCE, expired) ----
         "incremental_dedup_survivors": _incremental_dedup_survivors,
-        # ---- new in round 8 (no verdict yet -> sort most-stale, enter window) ----
         "simhash_near_pairs": _simhash_near_pairs,
         "ivf_ann_recall": _ivf_ann_recall,
-        # ---- new in round 8, deferred to the r9 window (_DEFER_ONCE[..]=8) ----
         "tfcosine_doc_pairs": _tfcosine_doc_pairs,
         "doc_redundancy_scores": _doc_redundancy_scores,
-        # ---- new in round 9 (no verdict yet -> sort most-stale, enter window) ----
         "chain_components_robust": _chain_components_robust,
     }
     return _rotate_stalest_first(base)

@@ -822,7 +822,7 @@ def test_fs_ops_s3_shapes_offline(tmp_path, monkeypatch):
     assert dest.read_bytes() == b"A"
 
 
-def test_sql_pandas_job_matches_spark_sql_path(spark, tmp_path):
+def test_sql_pandas_job_matches_spark_sql_path(spark, tmp_path, sf_dir):
     """SQL-over-pandas engine (reference jobs/generic/sql_pandas_job.py):
     same sql_file, same registry shape, DuckDB execution — result must
     match the Spark SQL engine on the same inputs."""
@@ -835,7 +835,7 @@ def test_sql_pandas_job_matches_spark_sql_path(spark, tmp_path):
     params = {
         "sql_file": str(repo / "conf" / "sql" / "events_per_type.sql"),
         "inputs": {
-            "events": {"path": "/root/testdata/sf0.001/events.parquet", "type": "parquet"}
+            "events": {"path": f"{sf_dir}/events.parquet", "type": "parquet"}
         },
         "add_created_at": False,
     }

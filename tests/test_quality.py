@@ -131,11 +131,13 @@ def test_oracle_comparator_detects_one_ulp_and_dtype_drift():
     queries corpus-wide."""
     import importlib.util
     import math
+    import os
 
     import pandas as pd
 
     spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
+        "check_oracle",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

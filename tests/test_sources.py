@@ -271,9 +271,10 @@ def test_airflow_dag_golden_file():
     from yaetos_spark.deploy_airflow import emit_airflow_dag
     from yaetos_spark.plans.registry import Registry
 
-    reg = Registry.from_file("/root/repo/conf/jobs.yml")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    reg = Registry.from_file(os.path.join(repo, "conf", "jobs.yml"))
     text = emit_airflow_dag(reg, "top_users")
-    with open("/root/repo/tests/fixtures/golden_airflow_dag.py") as fh:
+    with open(os.path.join(repo, "tests", "fixtures", "golden_airflow_dag.py")) as fh:
         golden = fh.read()
     assert text == golden
     # structural invariants, independent of the golden text

@@ -20,10 +20,11 @@ session factory confs) — exactly what the grading driver does.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import numpy as np  # noqa: E402

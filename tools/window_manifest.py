@@ -1,15 +1,18 @@
 """Emit the driver-evaluation window manifest for the current tree.
 
-The grading driver runs the FIRST 50 entries of ``queries()``; which 50
-that is depends on ``_rotate_stalest_first`` over the committed
-``CORRECTNESS_r*.json`` artifacts plus ``_VERIFY_NEXT``.  This script
-materializes that computation WITHOUT creating a SparkSession, so the
-per-round ``WINDOW_r{N}.json`` artifact lets a judge audit rotation
-coverage (every query's verdict age) without executing the module.
+The grading driver runs the FIRST 50 entries of ``queries()``.  Which 50
+that is follows from ``_rotate_stalest_first`` alone: queries with no
+passing verdict first, then by the round of their latest passing verdict
+in the committed ``CORRECTNESS_r*.json`` artifacts, oldest first.  This
+script materializes that order WITHOUT creating a SparkSession, records
+every query's verdict age, and checks that the rotation keeps every
+query within the 3-round age bound (``check_capacity``).  The per-round
+``WINDOW_r{N}.json`` artifact lets a judge audit rotation coverage
+without executing the module.
 
 Usage:
     python tools/window_manifest.py            # print to stdout
-    python tools/window_manifest.py --out WINDOW_r06.json
+    python tools/window_manifest.py --out WINDOW_r13.json
 """
 
 from __future__ import annotations
@@ -21,27 +24,17 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
+AGE_BOUND = 3
 
 
 def build_manifest() -> dict:
     sys.path.insert(0, REPO)
-    import glob
-    import re
-
     import __spark_entry__ as entry
 
-    base = entry.queries()  # callables are not invoked — ordering only
-    names = list(base)
-    # the SAME computation the rotation itself uses — no parallel
-    # implementation to drift
-    last_pass = entry._last_pass_rounds()
-    next_round = entry._next_round()
-    # round-keyed deferrals: only a _DEFER_ONCE entry naming THIS round
-    # is live; expired entries are audit-trail rows with no effect
-    active_defer = entry._active_deferrals()
-    # _VERIFY_NEXT plus any round-keyed _VERIFY_AT entry active for the
-    # upcoming round (same helper the rotation itself uses)
-    forced = entry._active_verify_next()
+    names = list(entry.queries())  # callables are not invoked — ordering only
+    # the SAME scan the rotation itself uses — no parallel implementation
+    # to drift
+    next_round, last_pass = entry._verdict_rounds()
     rows = []
     for i, n in enumerate(names):
         lp = last_pass.get(n)
@@ -51,164 +44,73 @@ def build_manifest() -> dict:
                 "name": n,
                 "in_window": i < WINDOW,
                 "last_pass_round": lp,
-                "verdict_age_rounds": (next_round - lp) if lp else None,
-                "verify_next": n in forced,
-                "deferred_once": n in active_defer,
+                "verdict_age_rounds": None if lp is None else next_round - lp,
             }
         )
-    ages = [r["verdict_age_rounds"] for r in rows if r["verdict_age_rounds"]]
-    # a _DEFER_ONCE row deferred FOR THIS round (and without a verdict)
-    # sits outside the window BY DESIGN — exclude it from the
-    # outside-window age alarm for exactly this one round; the round
-    # key expires the exemption, so any verdict-less row outside the
-    # window in a later round is a real rotation bug and keeps the
-    # loud 10**9 sentinel
-    outside = [
-        r for r in rows
-        if not r["in_window"]
-        and not (r["deferred_once"] and r["verdict_age_rounds"] is None)
-    ]
-    capacity = check_capacity(rows, forced, entry, next_round)
+    capacity = check_capacity(rows, next_round)
+    ages = [r["verdict_age_rounds"] for r in rows if r["verdict_age_rounds"] is not None]
     return {
         "for_round": next_round,
         "window_size": WINDOW,
         "capacity": capacity,
         "total_queries": len(names),
-        "max_verdict_age_rounds": max(ages) if ages else None,
+        "max_verdict_age_rounds": max(ages, default=None),
+        # check_capacity guarantees every outside-window row has a verdict
         "max_age_outside_window": max(
-            (r["verdict_age_rounds"] or 10**9) for r in outside
-        )
-        if outside and len(rows) > WINDOW
-        else None,
-        "verify_next": sorted(forced),
-        "verify_at_table": dict(getattr(entry, "_VERIFY_AT", {})),
-        "verify_next_table": dict(getattr(entry, "_VERIFY_NEXT", {})),
-        "deferred_once": sorted(active_defer),
-        "defer_once_table": dict(getattr(entry, "_DEFER_ONCE", {})),
-        "defer_until_table": dict(getattr(entry, "_DEFER_UNTIL", {})),
+            (r["verdict_age_rounds"] for r in rows if not r["in_window"]),
+            default=None,
+        ),
         "queries": rows,
     }
 
 
-def check_capacity(rows: list, forced: set, entry, next_round: int) -> dict:
-    """Rotation-capacity invariants, enforced when the manifest is
-    built — i.e. when a pin is WRITTEN, not when a later round's
-    grading silently drops a stale query (VERDICT r9 item 6).
+def check_capacity(rows: list, next_round: int) -> dict:
+    """Raise ``ValueError`` unless the rotation keeps every query within
+    the age bound this round and the next two.
 
-    1. Everything that MUST be graded this round is in-window: forced
-       entries, queries at verdict age >= 3 (a miss puts them past the
-       judge's age bound), and verdict-less queries not actively
-       deferred.
-    2. NEXT round's mandatory set fits: the cohort aging to 3 at
-       round+1 (outside-window queries whose last pass is round-2),
-       plus verdict-less outside-window queries (deferred this round,
-       auto-entering next), plus pins keyed to round+1, plus
-       still-active _VERIFY_NEXT entries not graded this round, must
-       not exceed the window. A pin beyond capacity raises HERE.
+    1. Everything that MUST be graded this round is in-window: queries
+       at verdict age >= 3 (a miss puts them past the age bound) and
+       queries with no passing verdict.
+    2. Each of the next two rounds' due cohorts fits the window: the
+       outside-window queries whose last pass is ``next_round-2`` reach
+       age 3 at ``next_round+1``, those at ``next_round-1`` reach it at
+       ``next_round+2``.  This round's window recycles at
+       ``next_round+3``, so no later round is decided by the current
+       verdicts.
     """
     win = {r["name"] for r in rows if r["in_window"]}
-    must_now = set(forced)
-    for r in rows:
-        age = r["verdict_age_rounds"]
-        if age is not None and age >= 3:
-            must_now.add(r["name"])
-        elif age is None and not r["deferred_once"]:
-            must_now.add(r["name"])
+    must_now = {
+        r["name"]
+        for r in rows
+        if r["verdict_age_rounds"] is None or r["verdict_age_rounds"] >= AGE_BOUND
+    }
     overflow_now = sorted(must_now - win)
     if overflow_now:
         raise ValueError(
             f"window capacity violated for round {next_round}: "
             f"{overflow_now} must be graded this round but sit outside "
-            f"the {WINDOW}-slot window — drop or re-key a pin"
+            f"the {WINDOW}-slot window"
         )
-    nxt = next_round + 1
-    last_pass = {r["name"]: r["last_pass_round"] for r in rows}
-    defer_until = dict(getattr(entry, "_DEFER_UNTIL", {}))
-    due_next = {
-        r["name"]
-        for r in rows
-        if not r["in_window"]
-        and (
-            (r["last_pass_round"] is None and defer_until.get(r["name"], 0) <= nxt)
-            or (r["last_pass_round"] is not None and nxt - r["last_pass_round"] >= 3)
-        )
-    }
-    pinned_next = {
-        n
-        for n, rnd in dict(getattr(entry, "_VERIFY_AT", {})).items()
-        if rnd == nxt
-    }
-    # an unexpired _VERIFY_NEXT entry outside this round's window still
-    # claims a next-round slot (in-window ones get their verdict now)
-    pinned_next |= {
-        n
-        for n, rnd in dict(getattr(entry, "_VERIFY_NEXT", {})).items()
-        if (last_pass.get(n) or -1) < rnd and n not in win
-    }
-    demand = due_next | pinned_next
-    if len(demand) > WINDOW:
-        raise ValueError(
-            f"round {nxt} is over-committed: {len(demand)} queries "
-            f"(cohort aging to 3: {len(due_next)}, pins: "
-            f"{len(pinned_next - due_next)} extra) exceed the "
-            f"{WINDOW}-slot window — a cohort member would silently "
-            f"reach verdict age 3+; re-key a pin to a later round"
-        )
-    horizon = check_horizon(rows, entry, next_round)
+    demand = {}
+    for ahead in range(1, AGE_BOUND):
+        rnd = next_round + ahead
+        due = [
+            r["name"]
+            for r in rows
+            if r["name"] not in win and r["last_pass_round"] == rnd - AGE_BOUND
+        ]
+        if len(due) > WINDOW:
+            raise ValueError(
+                f"round {rnd} is over-committed: {len(due)} queries reach "
+                f"verdict age {AGE_BOUND} there but the window has "
+                f"{WINDOW} slots"
+            )
+        demand[str(rnd)] = len(due)
     return {
         "must_grade_this_round": len(must_now),
-        "next_round_due": len(due_next),
-        "next_round_pinned_extra": len(demand - due_next),
-        "next_round_demand": len(demand),
+        "demand_by_round": demand,
         "window": WINDOW,
-        "horizon_demand": horizon,
     }
-
-
-def check_horizon(rows: list, entry, next_round: int, n_rounds: int = 6) -> dict:
-    """Simulate the rotation ``n_rounds`` ahead and assert every
-    round's MANDATORY demand fits the window — needed since
-    ``_DEFER_UNTIL`` can park a verdict-less query two or more rounds
-    out, where the one-round lookahead above cannot see a collision.
-
-    The simulation is conservative: each round grades exactly its
-    mandatory set (the cohort whose verdict age reaches 3, verdict-less
-    queries at their first eligible round, and round-keyed pins), with
-    NO opportunistic pre-pulls — real rounds can only have less future
-    demand than this.  The current round grades its actual in-window
-    set.  At corpus saturation (3 x WINDOW queries) the schedule is
-    periodic, so a short horizon proves the steady state."""
-    defer_once = dict(getattr(entry, "_DEFER_ONCE", {}))
-    defer_until = dict(getattr(entry, "_DEFER_UNTIL", {}))
-    verify_at = dict(getattr(entry, "_VERIFY_AT", {}))
-    last = {r["name"]: r["last_pass_round"] for r in rows}
-    eligible = {}
-    for n, lp in last.items():
-        if lp is None:
-            e = next_round
-            if defer_once.get(n) == next_round:
-                e = next_round + 1
-            e = max(e, defer_until.get(n, 0))
-            eligible[n] = e
-    demand_by_round = {}
-    graded_now = {r["name"] for r in rows if r["in_window"]}
-    for n in graded_now:
-        last[n] = next_round
-    demand_by_round[next_round] = len(graded_now)
-    for r in range(next_round + 1, next_round + 1 + n_rounds):
-        must = {n for n, lp in last.items() if lp is not None and r - lp >= 3}
-        must |= {n for n, lp in last.items() if lp is None and eligible[n] <= r}
-        must |= {n for n, rnd in verify_at.items() if rnd == r}
-        if len(must) > WINDOW:
-            raise ValueError(
-                f"round {r} is over-committed {r - next_round} rounds out: "
-                f"{len(must)} mandatory queries exceed the {WINDOW}-slot "
-                f"window — re-key a _DEFER_UNTIL/_VERIFY_AT entry"
-            )
-        for n in must:
-            last[n] = r
-        demand_by_round[r] = len(must)
-    return {str(k): v for k, v in demand_by_round.items()}
 
 
 def main() -> int:
