@@ -725,3 +725,101 @@ def test_starved_scan_repartition_gate(spark, sf_dir):
         par.selectExpr("sum(hash(l_orderkey, l_partkey, l_quantity))").first()[0]
         == base.selectExpr("sum(hash(l_orderkey, l_partkey, l_quantity))").first()[0]
     )
+
+
+def test_max_split_bytes_parses_spark_size_strings(spark, monkeypatch):
+    """``spark.sql.files.maxPartitionBytes`` comes back verbatim as set
+    ("256m", "1g"); the starved-scan gate must read it as bytes, not
+    fall back to 128 MiB."""
+    from yaetos_spark.sources import tables as T
+
+    assert T._parse_bytes("134217728") == 128 << 20
+    assert T._parse_bytes("64kb") == 64 << 10
+    assert T._parse_bytes("1048576b") == 1 << 20
+    assert T._parse_bytes("2T") == 2 << 40
+    with pytest.raises(ValueError):
+        T._parse_bytes("12 parsecs")
+    conf_key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf_key)
+    # 1 GiB in 64 row groups: byte splits alone decide the scan width
+    monkeypatch.setattr(T, "_scan_layout", lambda path: (1 << 30, 10**6, 64))
+    p = spark.sparkContext.defaultParallelism
+    try:
+        for size, split in (("256m", 256 << 20), ("1g", 1 << 30)):
+            spark.conf.set(conf_key, size)
+            assert spark.conf.get(conf_key) == size
+            assert T._max_split_bytes(spark) == split
+            byte_tasks = (1 << 30) // split
+            expected = p if byte_tasks * 2 <= p else None
+            assert T._starved_scan_partitions(spark, "any.parquet") == expected
+    finally:
+        spark.conf.set(conf_key, old)
+
+
+def _spark_jobs(spark, group, fn):
+    """(fn's result, number of Spark jobs fn launched) under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_schema_inferred_once_per_path(spark, tmp_path):
+    """The second ``load_table`` of a path reuses the first read's
+    schema (no inference job); a rewrite with a new ``mtime_ns`` is
+    re-inferred and shows its new column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from yaetos_spark.sources.tables import load_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    first, jobs1 = _spark_jobs(spark, "schema_cache_1", lambda: load_table(spark, str(tmp_path), "t"))
+    second, jobs2 = _spark_jobs(spark, "schema_cache_2", lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs1 >= 1  # schema inference runs a Spark job
+    assert jobs2 == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+    mtime = os.stat(path).st_mtime_ns
+    pq.write_table(pa.table({"a": [4], "b": ["w"], "c": [1.5]}), path)
+    # pin a distinct mtime: two writes can share a coarse timestamp tick
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    third, jobs3 = _spark_jobs(spark, "schema_cache_3", lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs3 >= 1
+    assert third.columns == ["a", "b", "c"]
+    assert [tuple(r) for r in third.collect()] == [(4, "w", 1.5)]
+
+
+def test_load_input_schema_or_read_kwargs_bypass_schema_cache(spark, tmp_path):
+    """A parquet spec with ``schema`` or ``read_kwargs`` reads the way it
+    always did. Shown on a path whose cached schema is stale (rewritten
+    with an extra column, mtime put back): the plain spec still sees the
+    cached two columns, the other two specs do not."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "s.parquet")
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), path)
+    assert load_input(spark, {"path": path, "type": "parquet"}).columns == ["a", "b"]
+    st = os.stat(path)
+    pq.write_table(pa.table({"a": [2], "b": ["y"], "c": [3]}), path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+
+    assert load_input(spark, {"path": path, "type": "parquet"}).columns == ["a", "b"]
+    with_kwargs, jobs = _spark_jobs(
+        spark,
+        "schema_cache_kwargs",
+        lambda: load_input(
+            spark, {"path": path, "type": "parquet", "read_kwargs": {"mergeSchema": "false"}}
+        ),
+    )
+    assert jobs >= 1 and with_kwargs.columns == ["a", "b", "c"]
+    with_schema = load_input(spark, {"path": path, "type": "parquet", "schema": "c BIGINT, a BIGINT"})
+    assert with_schema.columns == ["c", "a"]
+    assert [tuple(r) for r in with_schema.collect()] == [(3, 2)]

@@ -12,12 +12,15 @@ Scale notes: parquet is the canonical interchange format — scans get
 min/max pushdown and column pruning for free. CSV/JSON inference is
 kept for parity but a ``schema`` key (Spark DDL string) avoids the
 extra inference pass, which at 100 TB is a full read of the data.
+A local parquet input without ``schema``/``read_kwargs`` has its schema
+inferred once per session (``tables.read_parquet``), not once per read.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABULAR_TYPES = (
     "csv",
@@ -84,16 +87,19 @@ def load_input(spark: SparkSession, spec: dict, loaded_inputs: dict | None = Non
     kwargs = dict(spec.get("read_kwargs") or {})
 
     if itype == "parquet":
-        from yaetos_spark.sources.tables import _ensure_nanos_conf
+        from yaetos_spark.sources.tables import _ensure_nanos_conf, read_parquet
 
         _ensure_nanos_conf(spark)
-        reader = spark.read
-        if schema:
-            reader = reader.schema(schema)
-        if kwargs:
-            reader = reader.options(**kwargs)
-        df = reader.parquet(path)
-        df = _normalize_nano_timestamps(df, path)
+        if schema or kwargs:
+            reader = spark.read
+            if schema:
+                reader = reader.schema(schema)
+            if kwargs:
+                reader = reader.options(**kwargs)
+            df, spark_schema = reader.parquet(path), None
+        else:
+            df, spark_schema = read_parquet(spark, path)
+        df = _normalize_nano_timestamps(df, path, spark_schema)
     elif itype == "orc":
         df = spark.read.orc(path)
     elif itype == "csv":
@@ -139,13 +145,17 @@ def load_input(spark: SparkSession, spec: dict, loaded_inputs: dict | None = Non
     return df
 
 
-def _normalize_nano_timestamps(df: DataFrame, path: str) -> DataFrame:
+def _normalize_nano_timestamps(
+    df: DataFrame, path: str, spark_schema: StructType | None = None
+) -> DataFrame:
     """Spark has no nanosecond timestamp: TIMESTAMP(NANOS) parquet
     columns arrive as raw longs (via spark.sql.legacy.parquet.nanosAsLong,
     set in the session factory — without it the scan fails outright).
     Probe the parquet footer with pyarrow and convert such columns to
     microsecond timestamps with exact integer division. Remote
-    filesystems pyarrow can't reach are skipped (columns stay long)."""
+    filesystems pyarrow can't reach are skipped (columns stay long).
+    ``spark_schema`` is ``df``'s schema when the caller already has it,
+    which saves a gateway round trip."""
     if "://" in path:  # local-fs probe only in v1
         return df
     try:
@@ -155,7 +165,7 @@ def _normalize_nano_timestamps(df: DataFrame, path: str) -> DataFrame:
         schema = ds.dataset(path, format="parquet").schema
     except Exception:
         return df
-    dtypes = dict(df.dtypes)
+    dtypes = {f.name: f.dataType.simpleString() for f in (spark_schema or df.schema).fields}
     for field in schema:
         if (
             pat.is_timestamp(field.type)
