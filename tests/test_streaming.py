@@ -1,3 +1,6 @@
+import os
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -202,7 +205,7 @@ def test_interval_join_streams(spark, tmp_path):
 def test_exactly_once_append_survives_batch_replay(spark, tmp_path):
     """A replayed foreachBatch (at-least-once delivery) must not
     duplicate rows: the batch rewrites its own _batch_id partition."""
-    from yaetos_spark.streaming.upsert import (
+    from yaetos_spark.streaming.batches import (
         append_batch_exactly_once,
         streaming_append_exactly_once,
     )
@@ -369,7 +372,7 @@ def test_streaming_count_min_matches_batch_and_survives_replay(spark, tmp_path):
     assert ests(read_count_min(spark, skd)) == {"a": 4, "b": 2, "c": 4}
 
     # compaction folds history partitions without changing the cells
-    compact_count_min(spark, skd)
+    compact_count_min(spark, skd, ckpt)
     assert ests(read_count_min(spark, skd)) == {"a": 4, "b": 2, "c": 4}
     import os
 
@@ -418,7 +421,7 @@ def test_streaming_hll_matches_batch_and_survives_replay(spark, tmp_path):
     hll_batch_exactly_once(spark.createDataFrame(b1, "k long"), 0, skd, "k", p=10)
     assert {(r.bucket, r.rho) for r in read_hll(spark, skd).collect()} == regs_batch
 
-    compact_hll(spark, skd)
+    compact_hll(spark, skd, ckpt)
     assert {(r.bucket, r.rho) for r in read_hll(spark, skd).collect()} == regs_batch
     import os
 
@@ -756,9 +759,9 @@ def test_streaming_dedup_compaction_reads_real_checkpoint(spark, tmp_path):
     and commits, its batches fold into -1; the commits-dir layout
     assumption (files named by batch id) is validated against what
     Structured Streaming actually writes."""
+    from yaetos_spark.streaming.batches import last_committed_batch
     from yaetos_spark.streaming.dedup import (
         compact_index,
-        last_committed_batch,
         read_survivors,
         streaming_dedup,
     )
@@ -789,83 +792,151 @@ def test_streaming_dedup_compaction_reads_real_checkpoint(spark, tmp_path):
     assert {r.doc_id for r in read_survivors(spark, out).collect()} == {0, 1, 11}
 
 
-def test_streaming_dedup_compaction_spares_uncommitted_batches(spark, tmp_path):
-    """The crash-then-compact-then-replay hazard: batch 1's sink data
-    landed but its checkpoint commit did NOT (crash between the
-    foreachBatch writes and the offset commit). Compaction must leave
-    that partition alone — folding it into -1 would defeat the
-    ``_batch_id != batch_id`` replay exclusion, every replayed doc
-    would self-collide at estimated Jaccard 1.0, and the whole batch
-    would silently vanish from the corpus."""
+def _index_compaction(spark, root):
     from yaetos_spark.streaming.dedup import (
         compact_index,
         dedup_batch_exactly_once,
         read_survivors,
     )
 
-    idx = str(tmp_path / "index")
-    out = str(tmp_path / "survivors")
-    b1_rows = [(10, "c0 c1 c2 c3 c4"), (11, "d0 d1 d2 d3 d4")]
-    dedup_batch_exactly_once(
-        spark.createDataFrame([(0, "a0 a1 a2 a3 a4")], "doc_id long, text string"),
-        0, idx, out, threshold=0.5,
+    idx, out = f"{root}/index", f"{root}/survivors"
+
+    def write(rows, batch_id):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        dedup_batch_exactly_once(docs, batch_id, idx, out, threshold=0.5)
+
+    def state():
+        # survivors and index ids, sorted: a doubled id is a stale
+        # partition left next to the history partition
+        return (
+            sorted(r.doc_id for r in read_survivors(spark, out).collect()),
+            sorted(r.id for r in spark.read.parquet(idx).select("id").collect()),
+        )
+
+    return SimpleNamespace(
+        dir=idx,
+        batches=[[(0, "a0 a1 a2 a3 a4")], [(10, "c0 c1 c2 c3 c4"), (11, "d0 d1 d2 d3 d4")]],
+        write=write,
+        compact=lambda ckpt: compact_index(spark, idx, ckpt),
+        state=state,
+        expected=lambda: ([0, 10, 11], [0, 10, 11]),
     )
-    # batch 1 writes its sink data, then "crashes" before the commit:
+
+
+def _count_min_compaction(spark, root):
+    from yaetos_spark.operators.sketches import count_min_build, count_min_estimate
+    from yaetos_spark.streaming.sketch import (
+        compact_count_min,
+        read_count_min,
+        sketch_batch_exactly_once,
+    )
+
+    skd = f"{root}/sketch"
+    batches = [[("a",)] * 3, [("a",)] * 2]
+
+    def words(rows):
+        return spark.createDataFrame(rows, "word string")
+
+    def ests(cells):
+        est = count_min_estimate(cells, words([("a",)]), "word", depth=2, width=16)
+        return {r.word: r.est for r in est.collect()}
+
+    return SimpleNamespace(
+        dir=skd,
+        batches=batches,
+        write=lambda rows, b: sketch_batch_exactly_once(
+            words(rows), b, skd, "word", depth=2, width=16
+        ),
+        compact=lambda ckpt: compact_count_min(spark, skd, ckpt),
+        state=lambda: ests(read_count_min(spark, skd)),
+        expected=lambda: ests(
+            count_min_build(words(batches[0] + batches[1]), "word", depth=2, width=16)
+        ),
+    )
+
+
+def _hll_compaction(spark, root):
+    from yaetos_spark.operators.sketches import hll_build
+    from yaetos_spark.streaming.sketch import compact_hll, hll_batch_exactly_once, read_hll
+
+    skd = f"{root}/hll"
+    batches = [[(i,) for i in range(40)], [(i,) for i in range(20, 60)]]
+
+    def keys(rows):
+        return spark.createDataFrame(rows, "k long")
+
+    def registers(regs):
+        return {(r.bucket, r.rho) for r in regs.collect()}
+
+    return SimpleNamespace(
+        dir=skd,
+        batches=batches,
+        write=lambda rows, b: hll_batch_exactly_once(keys(rows), b, skd, "k", p=4),
+        compact=lambda ckpt: compact_hll(spark, skd, ckpt),
+        state=lambda: registers(read_hll(spark, skd)),
+        expected=lambda: registers(hll_build(keys(batches[0] + batches[1]), "k", p=4)),
+    )
+
+
+# the three committed-batch compactions, each over its own sink layout:
+# ``write`` lands one micro-batch, ``state`` reads what a consumer sees,
+# ``expected`` is that state built from both batches in one shot
+_COMPACTIONS = {
+    "index": _index_compaction,
+    "count_min": _count_min_compaction,
+    "hll": _hll_compaction,
+}
+
+
+def _batch_ids(path) -> set[int]:
+    return {int(d.split("=")[1]) for d in os.listdir(path) if d.startswith("_batch_id=")}
+
+
+@pytest.mark.parametrize("kind", ["index", "count_min"])
+def test_streaming_dedup_compaction_spares_uncommitted_batches(spark, tmp_path, kind):
+    """The crash-then-compact-then-replay hazard: batch 1's sink data
+    landed but its checkpoint commit did NOT (crash between the
+    foreachBatch writes and the offset commit). Compaction must leave
+    that partition alone, because restart replays batch 1 into it.
+    Folded into -1, the replay would defeat the index's
+    ``_batch_id != batch_id`` exclusion (every replayed doc would
+    self-collide at estimated Jaccard 1.0 and the batch would silently
+    vanish) and would add the count-min cells a second time."""
+    case = _COMPACTIONS[kind](spark, str(tmp_path / "sink"))
+    for b, rows in enumerate(case.batches):
+        case.write(rows, b)
     # only batch 0 appears in the checkpoint's commits dir
-    dedup_batch_exactly_once(
-        spark.createDataFrame(b1_rows, "doc_id long, text string"),
-        1, idx, out, threshold=0.5,
-    )
-    ckpt = _commit_batches(tmp_path, 0)
-    compact_index(spark, idx, ckpt)
-    # batch 1's partition survived compaction un-folded
-    parts = {r._batch_id for r in spark.read.parquet(idx).select("_batch_id").distinct().collect()}
-    assert parts == {-1, 1}
-    # restart replays batch 1: its docs must NOT collide with their own
-    # failed-attempt signatures — both survive, decisions unchanged
-    dedup_batch_exactly_once(
-        spark.createDataFrame(b1_rows, "doc_id long, text string"),
-        1, idx, out, threshold=0.5,
-    )
-    assert {r.doc_id for r in read_survivors(spark, out).collect()} == {0, 10, 11}
-    sigs = spark.read.parquet(idx)
-    assert sigs.count() == sigs.select("id").distinct().count() == 3
+    case.compact(_commit_batches(tmp_path, 0))
+    after_compaction = _batch_ids(case.dir)
+    case.write(case.batches[1], 1)  # restart replays batch 1
+    assert case.state() == case.expected()
+    assert after_compaction == {-1, 1}
 
     # with NOTHING committed, compaction is a no-op (nothing is safe)
-    idx2 = str(tmp_path / "index2")
-    out2 = str(tmp_path / "survivors2")
-    dedup_batch_exactly_once(
-        spark.createDataFrame([(5, "e0 e1 e2 e3 e4")], "doc_id long, text string"),
-        0, idx2, out2, threshold=0.5,
-    )
-    empty_ckpt = str(tmp_path / "ckpt_empty")
-    compact_index(spark, idx2, empty_ckpt)
-    assert {r._batch_id for r in spark.read.parquet(idx2).select("_batch_id").distinct().collect()} == {0}
+    fresh = _COMPACTIONS[kind](spark, str(tmp_path / "fresh"))
+    fresh.write(fresh.batches[0], 0)
+    fresh.compact(str(tmp_path / "ckpt_empty"))
+    assert _batch_ids(fresh.dir) == {0}
 
 
-def test_streaming_dedup_compaction_pins_static_overwrite(spark, tmp_path):
-    """An ambient partitionOverwriteMode=dynamic must not change
-    compaction semantics: the full-directory replace is pinned static,
-    so stale batch partitions cannot survive the fold."""
-    from yaetos_spark.streaming.dedup import compact_index, dedup_batch_exactly_once
-
-    idx = str(tmp_path / "index")
-    out = str(tmp_path / "survivors")
-    for b, text in enumerate(["a0 a1 a2 a3 a4", "b0 b1 b2 b3 b4"]):
-        dedup_batch_exactly_once(
-            spark.createDataFrame([(b, text)], "doc_id long, text string"),
-            b, idx, out, threshold=0.5,
-        )
+@pytest.mark.parametrize("kind", sorted(_COMPACTIONS))
+def test_streaming_dedup_compaction_pins_static_overwrite(spark, tmp_path, kind):
+    """An ambient partitionOverwriteMode=dynamic must not change any
+    compaction's result: the full-directory replace is pinned static on
+    the write, so folded batch partitions cannot survive next to -1 and
+    be read twice."""
+    case = _COMPACTIONS[kind](spark, str(tmp_path))
+    for b, rows in enumerate(case.batches):
+        case.write(rows, b)
     ckpt = _commit_batches(tmp_path, 0, 1)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        compact_index(spark, idx, ckpt)
+        case.compact(ckpt)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    sigs = spark.read.parquet(idx)
-    assert {r._batch_id for r in sigs.select("_batch_id").distinct().collect()} == {-1}
-    assert sigs.count() == 2
+    assert case.state() == case.expected()
+    assert _batch_ids(case.dir) == {-1}
     # ambient setting restored, not clobbered by the pin
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == prev
 

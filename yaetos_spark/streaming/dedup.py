@@ -13,13 +13,12 @@ Exactly-once: ``foreachBatch`` is at-least-once, and naive appends
 would break a replay twice over — the replayed batch's own signatures
 from the failed attempt are already in the index, so every replayed doc
 would "collide" with itself (estimated Jaccard 1.0) and be dropped; and
-the index would hold its signatures twice. Same recipe as
-``upsert.append_batch_exactly_once`` / ``sketch_batch_exactly_once``:
-each batch writes survivors and signatures into its OWN ``_batch_id``
-partition via dynamic partition overwrite (replay rewrites identical
-content — the dedup decisions are deterministic), and the
-against-index read EXCLUDES the current batch id (partition-pruned
-scan), so a replay sees exactly the pre-batch index state.
+the index would hold its signatures twice. The sink is the shared one
+in ``batches.py``: each batch writes survivors and signatures into its
+OWN ``_batch_id`` partition (replay rewrites identical content — the
+dedup decisions are deterministic), and the against-index read
+EXCLUDES the current batch id (partition-pruned scan), so a replay
+sees exactly the pre-batch index state.
 
 Scale notes: the per-batch work is the batch-sized shingle join plus
 one band-keyed equi-join against the index band rows — linear in batch
@@ -38,38 +37,13 @@ from yaetos_spark.operators.dedup import (
     filter_against_signatures,
     minhash_signatures,
 )
-from yaetos_spark.plans.paths import dataset_exists, list_file_names
-
-BATCH_COL = "_batch_id"
-
-
-def last_committed_batch(spark, checkpoint_dir: str) -> int | None:
-    """Highest batch id with a COMMIT recorded in the streaming
-    checkpoint (the files under ``<checkpoint>/commits`` are named by
-    batch id; Spark writes one only after the batch's foreachBatch
-    completed). Batches above this id may have written sink data in an
-    attempt whose commit never landed — exactly the ones a restart
-    replays, so exactly the ones compaction must leave alone. None =
-    nothing committed yet."""
-    commits = checkpoint_dir.rstrip("/") + "/commits"
-    ids = []
-    for name in list_file_names(commits, spark):
-        try:
-            ids.append(int(name))
-        except ValueError:  # .tmp / metadata entries
-            continue
-    return max(ids, default=None)
-
-
-def _dynamic_overwrite(df: DataFrame, out_dir: str, batch_id: int) -> None:
-    spark = df.sparkSession
-    stamped = df.withColumn(BATCH_COL, F.lit(int(batch_id)))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        stamped.write.mode("overwrite").partitionBy(BATCH_COL).parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+from yaetos_spark.plans.paths import dataset_exists
+from yaetos_spark.streaming.batches import (
+    BATCH_COL,
+    append_batch_exactly_once,
+    compact_batches,
+    start_batch_stream,
+)
 
 
 def dedup_batch_exactly_once(
@@ -119,8 +93,8 @@ def dedup_batch_exactly_once(
     surv_sigs = new_sigs.join(
         survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
     )
-    _dynamic_overwrite(survivors, survivors_dir, batch_id)
-    _dynamic_overwrite(surv_sigs, index_dir, batch_id)
+    append_batch_exactly_once(survivors, batch_id, survivors_dir)
+    append_batch_exactly_once(surv_sigs, batch_id, index_dir)
 
 
 def streaming_dedup(
@@ -153,12 +127,7 @@ def streaming_dedup(
             bands,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, apply, checkpoint_dir)
 
 
 def read_survivors(spark, survivors_dir: str) -> DataFrame:
@@ -168,48 +137,13 @@ def read_survivors(spark, survivors_dir: str) -> DataFrame:
 
 def compact_index(spark, index_dir: str, checkpoint_dir: str) -> None:
     """Fold the COMMITTED batch partitions of the signature index into
-    a single ``_batch_id=-1`` history partition, so the against-index
-    scan stays O(1) partitions as batches accumulate (same recipe as
-    ``sketch.compact_count_min``). Run it between streaming runs.
+    the ``_batch_id=-1`` history partition (``batches.compact_batches``),
+    so the against-index scan stays O(1) partitions as batches
+    accumulate. Run it between streaming runs.
 
-    Only partitions whose batch id is <= the checkpoint's last COMMITTED
-    batch (``last_committed_batch``) are folded; anything above stays in
-    its own partition. This is what keeps the exactly-once replay guard
-    sound across compaction: a batch written by a FAILED attempt (sink
-    data landed, checkpoint commit did not) will be REPLAYED on restart,
-    and its replay excludes its own signatures via the
-    ``_batch_id != batch_id`` partition filter — if compaction had
-    folded that partition into -1, every replayed doc would collide
-    with its own failed-attempt signature at estimated Jaccard 1.0 and
-    the whole batch would silently vanish. Folding only committed
-    batches is safe precisely because committed batches are never
-    replayed.
-
-    localCheckpoint before the static overwrite avoids the
-    read-own-input hazard; re-running compaction is idempotent. The
-    write pins ``partitionOverwriteMode=static`` (full-directory
-    replace): under an ambient ``dynamic`` setting the overwrite would
-    only replace the partitions present in ``merged`` — with an
-    already-compacted index that is just -1, leaving every stale batch
-    partition in place (duplicated signatures, and a surviving stale
-    partition re-exposes the self-collision replay drop)."""
-    last = last_committed_batch(spark, checkpoint_dir)
-    if last is None:
-        # nothing committed: every batch partition is potentially a
-        # failed attempt awaiting replay — folding any would break the
-        # replay guard, so there is nothing safe to compact
-        return
-    idx = spark.read.parquet(index_dir)
-    fold = (
-        idx.where(F.col(BATCH_COL) <= F.lit(int(last)))
-        .drop(BATCH_COL)
-        .withColumn(BATCH_COL, F.lit(-1))
-    )
-    keep = idx.where(F.col(BATCH_COL) > F.lit(int(last)))
-    merged = fold.unionByName(keep).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        merged.write.mode("overwrite").partitionBy(BATCH_COL).parquet(index_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    Folding a batch that is still due for replay would defeat the
+    ``_batch_id != batch_id`` replay exclusion: every replayed doc would
+    collide with its own failed-attempt signature at estimated Jaccard
+    1.0 and the whole batch would silently vanish. The fold spares
+    uncommitted batches, so the guard stays sound across compaction."""
+    compact_batches(spark, index_dir, checkpoint_dir, lambda sigs: sigs)

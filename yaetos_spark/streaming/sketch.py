@@ -3,18 +3,19 @@ key stream, kept exactly-once across micro-batches.
 
 The problem with summing a sketch in place under foreachBatch is that
 replayed batches (foreachBatch is at-least-once) would double-count —
-cell sums are not idempotent.  Same recipe as
-``upsert.append_batch_exactly_once``: each micro-batch writes its OWN
-partial sketch (<= depth*width rows by construction, regardless of
-batch size) into a ``_batch_id=<id>`` partition via dynamic partition
-overwrite, so a replay rewrites its partition with identical content
-instead of double-adding.  The partition layout IS the commit log.
+cell sums are not idempotent.  The sink is the shared one in
+``batches.py``: each micro-batch writes its OWN partial sketch
+(<= depth*width rows by construction, regardless of batch size) into a
+``_batch_id=<id>`` partition, so a replay rewrites its partition with
+identical content instead of double-adding.  The partition layout IS
+the commit log.
 
 Reading the sketch is merge-on-read (cell-wise sum across batch
-partitions — sketches are linear); ``compact_count_min`` folds history
-into one partition when the batch count grows.  This is the standard
-production shape for per-day / per-hour sketch rollups at 100 TB: the
-full corpus is never re-scanned, and partial sketches are tiny.
+partitions — sketches are linear); ``compact_count_min`` folds the
+committed batches into one partition when the batch count grows.  This
+is the standard production shape for per-day / per-hour sketch rollups
+at 100 TB: the full corpus is never re-scanned, and partial sketches
+are tiny.
 """
 
 from __future__ import annotations
@@ -22,9 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yaetos_spark.operators.sketches import count_min_build
-
-BATCH_COL = "_batch_id"
+from yaetos_spark.operators.sketches import (
+    count_min_build,
+    count_min_estimate,
+    histogram_build,
+    hll_build,
+)
+from yaetos_spark.streaming.batches import (
+    append_batch_exactly_once,
+    compact_batches,
+    start_batch_stream,
+)
 
 
 def sketch_batch_exactly_once(
@@ -40,16 +49,10 @@ def sketch_batch_exactly_once(
     """Build this batch's partial sketch and land it in its own
     ``_batch_id`` partition (replay-safe: same batch id always rewrites
     the same partition with the same cells)."""
-    spark = batch_df.sparkSession
     partial = count_min_build(
         batch_df, key, depth=depth, width=width, seed=seed, weight=weight
-    ).withColumn(BATCH_COL, F.lit(int(batch_id)))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partial.write.mode("overwrite").partitionBy(BATCH_COL).parquet(sketch_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    )
+    append_batch_exactly_once(partial, batch_id, sketch_dir)
 
 
 def streaming_count_min(
@@ -71,35 +74,25 @@ def streaming_count_min(
             depth=depth, width=width, seed=seed, weight=weight,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, apply, checkpoint_dir)
+
+
+def _sum_cells(cells: DataFrame) -> DataFrame:
+    return cells.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def read_count_min(spark, sketch_dir: str) -> DataFrame:
     """Current merged sketch: cell-wise sum over all batch partitions
     (sketches are linear, so merge-on-read is exact)."""
-    return (
-        spark.read.parquet(sketch_dir)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return _sum_cells(spark.read.parquet(sketch_dir))
 
 
-def compact_count_min(spark, sketch_dir: str) -> None:
-    """Fold all batch partitions into a single ``_batch_id=-1`` history
-    partition so merge-on-read stays O(1) partitions as batches
-    accumulate.  Safe against the dynamic-overwrite read-own-input
-    hazard via localCheckpoint before the write; replaying compaction
-    is idempotent (same merged cells)."""
-    merged = read_count_min(spark, sketch_dir).withColumn(BATCH_COL, F.lit(-1))
-    merged = merged.localCheckpoint(eager=True)
-    # static overwrite replaces the WHOLE directory: history partitions
-    # are absorbed into _batch_id=-1, later batches re-add their own
-    merged.write.mode("overwrite").partitionBy(BATCH_COL).parquet(sketch_dir)
+def compact_count_min(spark, sketch_dir: str, checkpoint_dir: str) -> None:
+    """Fold the batches the stream's checkpoint has committed into the
+    ``_batch_id=-1`` history partition by cell sum
+    (``batches.compact_batches``); uncommitted batches keep their
+    partitions, so a replay cannot count them twice."""
+    compact_batches(spark, sketch_dir, checkpoint_dir, _sum_cells)
 
 
 def hll_batch_exactly_once(
@@ -114,18 +107,7 @@ def hll_batch_exactly_once(
     partition — same replay-safe recipe as the count-min writer (HLL
     registers are idempotent under max-merge, but per-batch partitions
     additionally make REPLAYS rewrite instead of interleave)."""
-    from yaetos_spark.operators.sketches import hll_build
-
-    spark = batch_df.sparkSession
-    partial = hll_build(batch_df, key, p=p, seed=seed).withColumn(
-        BATCH_COL, F.lit(int(batch_id))
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partial.write.mode("overwrite").partitionBy(BATCH_COL).parquet(sketch_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    append_batch_exactly_once(hll_build(batch_df, key, p=p, seed=seed), batch_id, sketch_dir)
 
 
 def streaming_hll(
@@ -144,30 +126,23 @@ def streaming_hll(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         hll_batch_exactly_once(batch_df, batch_id, sketch_dir, key, p=p, seed=seed)
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, apply, checkpoint_dir)
+
+
+def _max_registers(registers: DataFrame) -> DataFrame:
+    return registers.groupBy("bucket").agg(F.max("rho").alias("rho"))
 
 
 def read_hll(spark, sketch_dir: str) -> DataFrame:
     """Current merged registers: bucket-wise max over all batch
     partitions (HLL merge is max, so merge-on-read is exact)."""
-    return (
-        spark.read.parquet(sketch_dir)
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
+    return _max_registers(spark.read.parquet(sketch_dir))
 
 
-def compact_hll(spark, sketch_dir: str) -> None:
-    """Fold all batch partitions into ``_batch_id=-1`` (idempotent,
-    read-own-input-safe via localCheckpoint)."""
-    merged = read_hll(spark, sketch_dir).withColumn(BATCH_COL, F.lit(-1))
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").partitionBy(BATCH_COL).parquet(sketch_dir)
+def compact_hll(spark, sketch_dir: str, checkpoint_dir: str) -> None:
+    """Fold the committed batches into ``_batch_id=-1`` by register max
+    (``batches.compact_batches``)."""
+    compact_batches(spark, sketch_dir, checkpoint_dir, _max_registers)
 
 
 def topk_batch_exactly_once(
@@ -188,7 +163,6 @@ def topk_batch_exactly_once(
     CMS estimates recovers the global top-k without ever storing the
     full key universe (the standard streaming heavy-hitters recipe:
     candidates bound the keys you score, the sketch scores them)."""
-    spark = batch_df.sparkSession
     sketch_batch_exactly_once(
         batch_df, batch_id, f"{state_dir}/cms", key,
         depth=depth, width=width, seed=seed,
@@ -199,14 +173,8 @@ def topk_batch_exactly_once(
         .orderBy(F.desc("_n"), key)
         .limit(candidates_per_batch)
         .select(key)
-        .withColumn(BATCH_COL, F.lit(int(batch_id)))
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        top.write.mode("overwrite").partitionBy(BATCH_COL).parquet(f"{state_dir}/cand")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    append_batch_exactly_once(top, batch_id, f"{state_dir}/cand")
 
 
 def streaming_top_k(
@@ -229,12 +197,7 @@ def streaming_top_k(
             candidates_per_batch=candidates_per_batch,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, apply, checkpoint_dir)
 
 
 def read_top_k(
@@ -251,8 +214,6 @@ def read_top_k(
     by estimate.  Estimates inherit the CMS one-sided guarantee:
     est >= true count, so a true heavy hitter in the candidate set can
     only rank HIGHER, never drop out."""
-    from yaetos_spark.operators.sketches import count_min_estimate
-
     cms = read_count_min(spark, f"{state_dir}/cms")
     cand = spark.read.parquet(f"{state_dir}/cand").select(key).distinct()
     est = count_min_estimate(cms, cand, key, depth=depth, width=width, seed=seed)
@@ -270,18 +231,7 @@ def histogram_batch_exactly_once(
     partition.  Boundaries are frozen by the caller (e.g. from a
     historical sample via ``histogram_boundaries``) — fixed boundaries
     are what make per-batch cells mergeable by plain addition."""
-    from yaetos_spark.operators.sketches import histogram_build
-
-    spark = batch_df.sparkSession
-    partial = histogram_build(batch_df, col, boundaries).withColumn(
-        BATCH_COL, F.lit(int(batch_id))
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partial.write.mode("overwrite").partitionBy(BATCH_COL).parquet(sketch_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    append_batch_exactly_once(histogram_build(batch_df, col, boundaries), batch_id, sketch_dir)
 
 
 def streaming_histogram(
@@ -299,12 +249,7 @@ def streaming_histogram(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         histogram_batch_exactly_once(batch_df, batch_id, sketch_dir, col, boundaries)
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, apply, checkpoint_dir)
 
 
 def read_histogram(spark, sketch_dir: str) -> DataFrame:

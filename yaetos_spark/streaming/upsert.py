@@ -8,16 +8,19 @@ those buckets alone via dynamic partition overwrite — cost per batch
 is O(touched buckets), not O(snapshot). Replaying a failed batch
 rewrites the same buckets with the same content (foreachBatch's
 idempotence recipe). A full-rewrite variant would not survive at
-scale, which is why it isn't offered.
+scale, which is why it isn't offered. The snapshot is laid out by
+``_bucket``, not ``_batch_id``, so it keeps its own write; the
+``_batch_id`` append sink and the stream start live in ``batches.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from yaetos_spark.operators.merge import latest_snapshot, upsert
+from yaetos_spark.plans.paths import dataset_exists
+from yaetos_spark.streaming.batches import start_batch_stream
 
 BUCKET_COL = "_bucket"
 
@@ -32,16 +35,13 @@ def _check_bucket_layout(spark, snapshot_dir: str, n_buckets: int) -> None:
     stale duplicate keys behind. A `_meta` sidecar (underscore prefix:
     invisible to parquet directory readers) records the layout on first
     write; later calls must match."""
-    from pyspark.sql.utils import AnalysisException
-
     meta_path = f"{snapshot_dir}/_meta"
-    try:
-        recorded = spark.read.parquet(meta_path).first()["n_buckets"]
-    except AnalysisException:
+    if not dataset_exists(meta_path, spark):
         spark.createDataFrame([(n_buckets,)], "n_buckets int").coalesce(1).write.mode(
             "overwrite"
         ).parquet(meta_path)
         return
+    recorded = spark.read.parquet(meta_path).first()["n_buckets"]
     if recorded != n_buckets:
         raise ValueError(
             f"snapshot at {snapshot_dir} was bucketed with n_buckets={recorded}; "
@@ -69,15 +69,13 @@ def merge_batch_into_snapshot(
     touched = [r[BUCKET_COL] for r in compacted.select(BUCKET_COL).distinct().collect()]
     if not touched:
         return
-    # the try guards ONLY the read: a failure inside the merge itself
-    # (schema drift, bad keys) must surface, not be misread as "first
-    # batch" — that would overwrite touched buckets with batch-only
-    # rows and silently drop the existing data
-    try:
+    # cold start is an explicit existence check (a snapshot dir holding
+    # only the `_meta` sidecar has no data yet): a failed read of an
+    # existing snapshot must surface, not be misread as "first batch" —
+    # that would overwrite touched buckets with batch-only rows and
+    # silently drop the existing data
+    if dataset_exists(snapshot_dir, spark):
         existing = spark.read.parquet(snapshot_dir)
-    except AnalysisException:  # first batch: snapshot doesn't exist yet
-        existing = None
-    if existing is not None:
         merged = upsert(
             existing.where(F.col(BUCKET_COL).isin(touched)), compacted, keys
         )
@@ -86,12 +84,12 @@ def merge_batch_into_snapshot(
     # materialize before writing: the merge reads the very files the
     # dynamic overwrite below replaces, so the lineage must be cut
     merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(snapshot_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(BUCKET_COL)
+        .parquet(snapshot_dir)
+    )
 
 
 def streaming_upsert(
@@ -102,67 +100,16 @@ def streaming_upsert(
     checkpoint_dir: str,
     n_buckets: int = 64,
 ):
-    """Wire a stream into the bucketed snapshot via foreachBatch.
-    Returns the started query (trigger availableNow — call
-    ``awaitTermination()``); re-run to process newly arrived data
-    incrementally through the shared checkpoint."""
+    """Wire a stream into the bucketed snapshot via foreachBatch
+    (``batches.start_batch_stream``)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into_snapshot(batch_df, snapshot_dir, keys, order_col, n_buckets)
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, apply, checkpoint_dir)
 
 
 def read_snapshot(spark, snapshot_dir: str) -> DataFrame:
     """Current state of the snapshot (drops the layout column)."""
     return spark.read.parquet(snapshot_dir).drop(BUCKET_COL)
 
-
-BATCH_COL = "_batch_id"
-
-
-def append_batch_exactly_once(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
-    """Exactly-once APPEND over foreachBatch's at-least-once replay.
-
-    The canonical recipe for non-transactional sinks: every batch lands
-    in its own ``_batch_id=<id>`` partition via dynamic partition
-    overwrite, so a replayed batch REWRITES its partition with the same
-    content instead of appending duplicates. No commit log needed — the
-    batch id in the layout IS the commit marker. Readers see the union
-    of all partitions; at 100 TB the per-batch directories also give
-    retention/compaction a natural unit."""
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            batch_df.withColumn(BATCH_COL, F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def streaming_append_exactly_once(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire a stream into exactly-once appends (trigger availableNow)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        append_batch_exactly_once(batch_df, batch_id, out_dir)
-
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
