@@ -2532,8 +2532,8 @@ def _incremental_dedup_survivors(spark, sf_dir):
     itself (exact n-gram Jaccard, min-id survivor); batch 2's survivors
     are then checked against batch 1 survivors' minhash SIGNATURES
     (banded-LSH candidates, estimated Jaccard >= threshold drops the
-    new doc) — the exact core `dedup_against_index` and the streaming
-    dedup sink run against their persisted index
+    new doc) — the exact core `streaming/dedup.py::dedup_against_index`
+    runs against its persisted index
     (operators/dedup.py:filter_against_signatures). The DuckDB oracle
     replicates the md5-minhash estimation bit-for-bit, so the
     signature-estimated drops are value-checked, not just counted."""

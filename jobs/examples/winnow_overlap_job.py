@@ -13,12 +13,9 @@ documents (operators/text.py):
 - ``hash_impl: md5`` — the ENGINE-PORTABLE path: every fingerprint is
   reproducible bit-for-bit in DuckDB/ANSI SQL, the right choice when
   another engine must verify or extend the fingerprint index.
-- ``hash_impl: xxhash64`` — JVM-native middle ground: whole-stage
-  codegen, full 64-bit hash space, ~5-13% over md5 (the scan is
-  transform-bound, not hash-bound).
 
-All three satisfy the same winnowing guarantee (any shared substring
-of length >= k + window - 1 yields a shared fingerprint) but are
+Both satisfy the same winnowing guarantee (any shared substring of
+length >= k + window - 1 yields a shared fingerprint) but are
 DISJOINT hash spaces: never mix fingerprints from different impls in
 one index — pick per pipeline, not per batch.
 """
@@ -32,7 +29,7 @@ from yaetos_spark.operators.text import (
 
 
 class WinnowOverlapJob(SparkJob):
-    """params: ``hash_impl`` ('rolling' | 'md5' | 'xxhash64'),
+    """params: ``hash_impl`` ('rolling' | 'md5'),
     ``k`` (gram chars), ``window`` (winnow window), ``min_shared``
     (pair threshold), ``max_doc_freq`` (boilerplate fingerprint cap),
     ``keep`` ('pairs' = overlap pairs, 'fingerprints' = the per-doc
@@ -44,12 +41,10 @@ class WinnowOverlapJob(SparkJob):
         window = int(self.params.get("window", 4))
         if impl == "rolling":
             fps = winnow_fingerprints_rolling(documents, k=k, window=window)
-        elif impl in ("md5", "xxhash64"):
-            fps = winnow_fingerprints(documents, k=k, window=window, hash_fn=impl)
+        elif impl == "md5":
+            fps = winnow_fingerprints(documents, k=k, window=window)
         else:
-            raise ValueError(
-                f"hash_impl must be 'rolling', 'md5' or 'xxhash64', got {impl!r}"
-            )
+            raise ValueError(f"hash_impl must be 'rolling' or 'md5', got {impl!r}")
         if self.params.get("keep", "pairs") == "fingerprints":
             return fps
         return winnow_overlap_pairs(

@@ -1,47 +1,32 @@
-"""Registry job wrapping
-:func:`yaetos_spark.operators.dedup.vacuum_signature_index` — the
-cross-run maintenance step for the incremental-dedup signature index.
+"""Registry job compacting the incremental-dedup signature index: the
+batch partitions ``<= through_batch`` fold into the ``_batch_id=-1``
+history partition through the shared crash-safe fold
+(:func:`yaetos_spark.streaming.batches.compact_batches`), so the
+against-index scan stays O(1) partitions as batches accumulate.
 
-:func:`dedup_against_index` appends every batch's survivor signatures,
-so the index directory grows one small-file write per batch forever
-(and a re-run double-appends identical rows). This job compacts it:
-dedup by id, rewrite to right-sized files, crash-safe rename swap.
-Same operational family as compact_job/retention_job (the reference's
-maintenance-job pattern, reference: yaetos/jobs/generic layout); the
-streaming dedup twin already compacts its own state — this closes the
-gap for the batch index.
-
-params: ``index_dir`` (required), ``target_file_bytes`` (default
-128 MiB). Returns a 1-row DataFrame of the vacuum stats so the run's
+params: ``index_dir`` and ``through_batch`` (both required). Pass the
+highest batch id that will not be re-run: a folded batch's re-run
+would find its own signatures in history and drop every document.
+Returns a 1-row DataFrame (index_dir, through_batch, rows) so the run's
 output documents what changed.
 """
 
 from __future__ import annotations
 
 from yaetos_spark.job import SparkJob
-from yaetos_spark.operators.dedup import vacuum_signature_index
+from yaetos_spark.streaming.batches import compact_batches
 
 
 class VacuumIndexJob(SparkJob):
     def transform(self, **_):
         index_dir = self.params.get("index_dir")
-        if not index_dir:
-            raise ValueError("vacuum_index_job requires params.index_dir")
-        stats = vacuum_signature_index(
-            self.spark,
-            index_dir,
-            int(self.params.get("target_file_bytes", 128 * 1024 * 1024)),
-        )
+        through = self.params.get("through_batch")
+        if not index_dir or through is None:
+            raise ValueError(
+                "vacuum_index_job requires params.index_dir and params.through_batch"
+            )
+        rows = compact_batches(self.spark, index_dir, int(through), lambda sigs: sigs)
         return self.spark.createDataFrame(
-            [
-                (
-                    index_dir,
-                    stats["rows_before"],
-                    stats["rows_after"],
-                    stats["files_before"],
-                    stats["files_after"],
-                )
-            ],
-            "index_dir string, rows_before long, rows_after long, "
-            "files_before long, files_after long",
+            [(index_dir, int(through), rows)],
+            "index_dir string, through_batch long, rows long",
         )

@@ -281,18 +281,24 @@ def test_cli_winnow_overlap_job(spark, tmp_path):
 
 
 def test_cli_vacuum_index_job(spark, tmp_path):
-    """The vacuum_dedup_index registry pattern end-to-end: build an
-    index, run the job through the CLI, check the index is compacted
-    and the stats row lands in the job output."""
-    from yaetos_spark.operators.dedup import build_signature_index
+    """The vacuum_dedup_index registry pattern end-to-end: build a
+    four-batch index, run the job through the CLI, check the batches
+    through ``through_batch`` fold into -1 with every row kept and the
+    stats row lands in the job output. ``through_batch`` is required."""
+    import pytest
+
+    from yaetos_spark.operators.dedup import minhash_signatures
+    from yaetos_spark.streaming.batches import append_batch_exactly_once
 
     idx = tmp_path / "sig_index"
     docs = spark.createDataFrame(
         [(i, f"doc number {i} some words {i % 5}") for i in range(40)],
         "doc_id bigint, text string",
     )
-    build_signature_index(docs, str(idx))
-    build_signature_index(docs, str(idx), mode="append")  # crash-retry dup rows
+    for b in range(4):
+        append_batch_exactly_once(
+            minhash_signatures(docs.where(f"doc_id % 4 = {b}")), b, str(idx)
+        )
     reg_path = tmp_path / "reg.yml"
     reg_path.write_text(yaml.safe_dump({
         "common_params": {"all_mode_params": {"base_path": str(tmp_path / "out"), "mode": "dev"}},
@@ -305,11 +311,16 @@ def test_cli_vacuum_index_job(spark, tmp_path):
             }
         },
     }))
-    assert cli.main(["--job_name=vacuum_dedup_index", f"--registry={reg_path}"]) == 0
+    argv = ["--job_name=vacuum_dedup_index", f"--registry={reg_path}"]
+    with pytest.raises(ValueError, match="through_batch"):
+        cli.main(argv)
+    assert cli.main([*argv, "--through_batch=2"]) == 0
     stats_dirs = list((tmp_path / "out" / "vacuum").iterdir())
     row = spark.read.parquet(str(stats_dirs[0])).collect()[0]
-    assert row.rows_before == 80 and row.rows_after == 40
-    assert spark.read.parquet(str(idx)).count() == 40
+    assert row.through_batch == 2 and row.rows == 40
+    index = spark.read.parquet(str(idx))
+    assert {r._batch_id for r in index.select("_batch_id").distinct().collect()} == {-1, 3}
+    assert index.count() == 40
 
 
 def test_cli_dsir_select_job(spark, tmp_path):

@@ -522,7 +522,7 @@ def test_chained_pipeline_reads_written_artifact(spark, tmp_path):
             },
         }
     }
-    flow = Flow(Registry(manifest), chain_dependencies=True)
+    flow = Flow(Registry(manifest))
     out = flow.run_pipeline(spark, "b", lambda name, params: classes[name](params))
     assert out.count() > 0
 
@@ -645,28 +645,39 @@ def test_retention_age_floor_and_bounded_growth(tmp_path):
 
 
 def test_incremental_dedup_job_via_registry(spark):
-    """The shipped incremental_dedup registry job: first run seeds the
-    signature index with the survivors; re-running the same input drops
-    every document (all indexed)."""
+    """The shipped incremental_dedup registry job: ``--batch_id`` is
+    required; the first run seeds the signature index with the
+    survivors; re-running the same batch id (a retry) returns the same
+    survivors and leaves the index as it was; the same input as a NEW
+    batch id drops every document (all indexed)."""
     import glob
     import shutil
 
+    import pytest
+
     from yaetos_spark.cli import main
 
+    index = "/tmp/yaetos_spark_out/incr_dedup_index"
+
+    def survivors(batch_id):
+        main(["--job_name=incremental_dedup", f"--batch_id={batch_id}"])
+        newest = sorted(glob.glob("/tmp/yaetos_spark_out/incr_dedup/*"))[-1]
+        # an empty output dir may hold only _SUCCESS
+        try:
+            return {r.doc_id for r in spark.read.parquet(newest).collect()}
+        except Exception:
+            return set()
+
     shutil.rmtree("/tmp/yaetos_spark_out", ignore_errors=True)
-    main(["--job_name=incremental_dedup"])
-    main(["--job_name=incremental_dedup"])
-    runs = sorted(glob.glob("/tmp/yaetos_spark_out/incr_dedup/*"))
-    assert len(runs) == 2
-    first = spark.read.parquet(runs[0]).count()
-    assert 0 < first <= 500
-    # 2nd run: empty output (written dir may hold only _SUCCESS)
-    try:
-        second = spark.read.parquet(runs[1]).count()
-    except Exception:
-        second = 0
-    assert second == 0
-    assert spark.read.parquet("/tmp/yaetos_spark_out/incr_dedup_index").count() == first
+    with pytest.raises(ValueError, match="batch_id"):
+        main(["--job_name=incremental_dedup"])
+    first = survivors(0)
+    assert 0 < len(first) <= 500
+    assert spark.read.parquet(index).count() == len(first)
+    assert survivors(0) == first
+    assert spark.read.parquet(index).count() == len(first)
+    assert survivors(1) == set()
+    assert spark.read.parquet(index).count() == len(first)
 
 
 # -- raw file copy (reference: jobs/generic/copy_raw_job.py:5-24) ------

@@ -145,7 +145,7 @@ def test_flow_chained_pipeline(spark, tmp_path):
         }
     }
     reg = Registry(manifest)
-    flow = Flow(reg, chain_dependencies=True)
+    flow = Flow(reg)
     out = flow.run_pipeline(spark, "dep2", lambda name, params: classes[name](params))
     rows = {r.session_id: (r.session_length, r.doubled_length) for r in out.collect()}
     assert rows == {"ab": (2, 4), "abcd": (4, 8)}

@@ -1316,38 +1316,6 @@ def test_resample_locf_all_null_ts_key_drops(spark):
     assert len(out) == 3  # buckets 00:00, 06:00, 12:00
 
 
-def test_winnow_xxhash64_variant(spark):
-    """hash_fn='xxhash64' (the production 100-TB path) keeps every
-    winnowing guarantee — identical docs share all fingerprints, a
-    long shared substring shares at least one, unrelated docs share
-    none — in a different hash space from the oracle-exact md5."""
-    import pytest
-
-    md5_fps = TX.winnow_fingerprints(_docs(spark), k=8, window=4)
-    xx_fps = TX.winnow_fingerprints(_docs(spark), k=8, window=4, hash_fn="xxhash64")
-    by_doc = {
-        r.doc_id: set(r.fps)
-        for r in xx_fps.groupBy("doc_id")
-        .agg(F.collect_set("fingerprint").alias("fps"))
-        .collect()
-    }
-    assert by_doc[1] == by_doc[4]
-    assert by_doc[1] & by_doc[2]
-    assert not (by_doc[1] & by_doc[3])
-    # the two hash spaces are disjoint by construction — mixing them
-    # in one index would silently find nothing
-    md5_all = {r.fingerprint for r in md5_fps.collect()}
-    assert not (md5_all & {f for s in by_doc.values() for f in s})
-    # overlap pairs downstream are hash-agnostic
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in TX.winnow_overlap_pairs(xx_fps, min_shared=1).collect()
-    }
-    assert (1, 4) in pairs and (1, 2) in pairs and all(3 not in p for p in pairs)
-    with pytest.raises(ValueError, match="hash_fn"):
-        TX.winnow_fingerprints(_docs(spark), hash_fn="sha1")
-
-
 def test_helper_column_guards_raise(spark):
     """Every operator that withColumn's constant scratch names onto a
     USER frame must refuse an input already carrying that name (silent

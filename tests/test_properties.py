@@ -1395,7 +1395,8 @@ def test_dedup_against_index_cold_warm_equals_one_shot(spark, case):
     import shutil
     import tempfile
 
-    from yaetos_spark.operators.dedup import dedup_against_index, drop_near_duplicates
+    from yaetos_spark.operators.dedup import drop_near_duplicates
+    from yaetos_spark.streaming.dedup import dedup_against_index
 
     docs, split = case
     schema = "doc_id long, text string"
@@ -1406,9 +1407,9 @@ def test_dedup_against_index_cold_warm_equals_one_shot(spark, case):
     idx = tempfile.mkdtemp(prefix="sig_idx_")
     shutil.rmtree(idx)  # dedup_against_index expects a NOT-yet-existing cold dir
     try:
-        s1 = dedup_against_index(b1, idx, threshold=0.5)
+        s1 = dedup_against_index(b1, 0, idx, threshold=0.5)
         rows1 = {(r.doc_id, r.text) for r in s1.collect()}
-        s2 = dedup_against_index(b2, idx, threshold=0.5)
+        s2 = dedup_against_index(b2, 1, idx, threshold=0.5)
         rows2 = {(r.doc_id, r.text) for r in s2.collect()}
         sigs = spark.read.parquet(idx)
         n_indexed = sigs.select("id").distinct().count()

@@ -625,9 +625,14 @@ def test_assign_splits_deterministic_and_decorrelated(spark):
 
 
 def test_incremental_dedup_against_index(spark, tmp_path):
-    from pyspark.sql import functions as F
+    import pytest
 
-    from yaetos_spark.operators.dedup import build_signature_index, dedup_against_index
+    from yaetos_spark.operators.dedup import minhash_signatures
+    from yaetos_spark.streaming.batches import append_batch_exactly_once
+    from yaetos_spark.streaming.dedup import dedup_against_index
+
+    def index_ids(path):
+        return sorted(r.id for r in spark.read.parquet(path).select("id").collect())
 
     idx = str(tmp_path / "sig_index")
     corpus = spark.createDataFrame(
@@ -637,7 +642,7 @@ def test_incremental_dedup_against_index(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    build_signature_index(corpus, idx)
+    append_batch_exactly_once(minhash_signatures(corpus), 0, idx)
 
     batch = spark.createDataFrame(
         [
@@ -648,20 +653,25 @@ def test_incremental_dedup_against_index(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    out = dedup_against_index(batch, idx, threshold=0.5)
+    out = dedup_against_index(batch, 1, idx, threshold=0.5)
     ids = sorted(r.doc_id for r in out.collect())
     # 10 drops (matches indexed doc 1), 11/12 collapse within-batch to 11
     assert ids == [11, 13]
     # index grew by exactly the survivors
-    assert sorted(r.id for r in spark.read.parquet(idx).select("id").collect()) == [1, 2, 11, 13]
+    assert index_ids(idx) == [1, 2, 11, 13]
 
-    # replaying the same batch now drops EVERYTHING (survivors indexed)
-    again = dedup_against_index(batch, idx, threshold=0.5, update_index=False)
-    assert again.count() == 0
+    # re-running batch 1 (a retry after a failed output write) returns
+    # the same survivors and leaves the index as the first run left it
+    again = dedup_against_index(batch, 1, idx, threshold=0.5)
+    assert sorted(r.doc_id for r in again.collect()) == [11, 13]
+    assert index_ids(idx) == [1, 2, 11, 13]
+    # the same docs as a NEW batch are all duplicates of indexed docs
+    assert dedup_against_index(batch, 2, idx, threshold=0.5).count() == 0
+    assert index_ids(idx) == [1, 2, 11, 13]
 
     # cold start with no index: pure within-batch dedup, index seeded
     idx2 = str(tmp_path / "fresh_index")
-    out2 = dedup_against_index(batch, idx2, threshold=0.5)
+    out2 = dedup_against_index(batch, 0, idx2, threshold=0.5)
     assert sorted(r.doc_id for r in out2.collect()) == [10, 11, 13]
     assert spark.read.parquet(idx2).count() == 3
 
@@ -670,10 +680,16 @@ def test_incremental_dedup_against_index(spark, tmp_path):
     # "unable to infer schema" until the dir is deleted by hand
     idx3 = tmp_path / "crashed_index"
     (idx3 / "_temporary" / "0").mkdir(parents=True)
-    out3 = dedup_against_index(batch, str(idx3), threshold=0.5)
+    out3 = dedup_against_index(batch, 0, str(idx3), threshold=0.5)
     assert sorted(r.doc_id for r in out3.collect()) == [10, 11, 13]
-    # the overwrite seeding replaced the droppings with a real index
+    # the first batch write replaced the droppings with a real index
     assert spark.read.parquet(str(idx3)).count() == 3
+
+    # an index without the _batch_id layout fails loudly on first use
+    flat = str(tmp_path / "flat_index")
+    minhash_signatures(corpus).write.parquet(flat)
+    with pytest.raises(Exception, match="_batch_id"):
+        dedup_against_index(batch, 1, flat, threshold=0.5)
 
 
 def test_gopher_filter_rules(spark):
@@ -801,58 +817,54 @@ def test_dedup_corpus_lines_null_text_doc_kept(spark):
     assert out[1].text_clean == "keep" and out[1].n_removed == 1
 
 
-def test_vacuum_signature_index(spark, tmp_path):
-    """The index VACUUM: N appended batches + one double-appended
-    re-run leave duplicate ids and a small-file pile; vacuum dedups by
-    id, rewrites to few files via a crash-safe rename swap, and the
-    NEXT incremental batch behaves exactly as before the vacuum."""
+def _count_files(path):
     import os
 
-    import pytest
-
-    from yaetos_spark.operators.dedup import (
-        build_signature_index,
-        dedup_against_index,
-        vacuum_signature_index,
+    return sum(
+        1 for _root, _d, fs in os.walk(path) for f in fs if not f.startswith(("_", "."))
     )
+
+
+def test_vacuum_signature_index(spark, tmp_path):
+    """Compacting the batch index: the partitions through the given
+    batch fold into -1 with every row kept and fewer files, nothing is
+    left beside the index, and the next batch dedups exactly as
+    before the compaction."""
+    import os
+
+    from yaetos_spark.operators.dedup import minhash_signatures
+    from yaetos_spark.streaming.batches import append_batch_exactly_once, compact_batches
+    from yaetos_spark.streaming.dedup import dedup_against_index
 
     idx = str(tmp_path / "sig_index")
     corpus = spark.createDataFrame(
         [(i, f"seed document number {i} with words {i % 7}") for i in range(30)],
         "doc_id bigint, text string",
     )
-    build_signature_index(corpus, idx)
-    for k in range(3):
+    # eight seed batches, then two dedup batches: enough small files
+    # for Spark's scan packing to merge
+    sigs = minhash_signatures(corpus).localCheckpoint()
+    for b in range(8):
+        append_batch_exactly_once(sigs.where(f"id % 8 = {b}"), b, idx)
+    for k in (8, 9):
         batch = spark.createDataFrame(
             [(1000 + 30 * k + i, f"batch {k} doc {i} fresh content {i}") for i in range(10)],
             "doc_id bigint, text string",
         )
-        dedup_against_index(batch, idx)
-    # a re-run of the last batch double-appends nothing NEW to the
-    # survivors (all near-dup vs the index now) — force real dup rows
-    # by appending the seed signatures again, the crash-retry shape
-    build_signature_index(corpus, idx, mode="append")
-
-    def count_files(p):
-        return sum(
-            1
-            for root, _d, fs in os.walk(p)
-            for f in fs
-            if not f.startswith(("_", "."))
-        )
+        dedup_against_index(batch, k, idx)
 
     before = spark.read.parquet(idx)
-    rows_before, files_before = before.count(), count_files(idx)
-    ids_before = {r.id for r in before.select("id").distinct().collect()}
-    assert rows_before > len(ids_before)  # real duplicates present
+    rows_before, files_before = before.count(), _count_files(idx)
+    ids_before = sorted(r.id for r in before.select("id").collect())
 
-    stats = vacuum_signature_index(spark, idx)
-    assert stats["rows_before"] == rows_before
-    assert stats["rows_after"] == len(ids_before)
-    assert stats["files_after"] < files_before
-    assert not os.path.exists(idx + "__vacuum") and not os.path.exists(idx + "__old")
+    assert compact_batches(spark, idx, None, lambda sigs: sigs) is None  # no-op
+    assert compact_batches(spark, idx, 8, lambda sigs: sigs) == rows_before
     after = spark.read.parquet(idx)
-    assert {r.id for r in after.select("id").collect()} == ids_before
+    assert {r._batch_id for r in after.select("_batch_id").distinct().collect()} == {-1, 9}
+    assert sorted(r.id for r in after.select("id").collect()) == ids_before
+    assert _count_files(idx) < files_before
+    for leftover in ("__compact", "__old", "__compact.lock"):
+        assert not os.path.exists(idx + leftover)
 
     # the index still serves incremental dedup: a near-dup of a seed
     # doc is dropped, a fresh doc survives
@@ -860,32 +872,21 @@ def test_vacuum_signature_index(spark, tmp_path):
         [(9001, "seed document number 3 with words 3"), (9002, "totally novel text here")],
         "doc_id bigint, text string",
     )
-    out = {r.doc_id for r in dedup_against_index(probe, idx, update_index=False).collect()}
-    assert out == {9002}
-
-    with pytest.raises(ValueError, match="local-filesystem"):
-        vacuum_signature_index(spark, "s3://bucket/index")
-
-    # lock file left behind by nothing — vacuum cleaned up after itself
-    assert not os.path.exists(idx + "__vacuum.lock")
+    assert {r.doc_id for r in dedup_against_index(probe, 10, idx).collect()} == {9002}
 
 
 def test_vacuum_mid_sequence_preserves_survivors(spark, tmp_path):
-    """VERDICT r10 item 6 — the index-hygiene invariant made explicit:
-    a vacuum dropped into the middle of an incremental-dedup batch
-    sequence must never change RESULTS, only file layout. Two arms run
-    the identical seed + 4-batch sequence (with a crash-retry double
-    append after batch 1 so the vacuum has real duplicate rows to
-    remove); arm B vacuums between batches 1 and 2. Every batch's
+    """A compaction dropped into the middle of an incremental-dedup
+    batch sequence must never change RESULTS, only file layout. Two
+    arms run the identical seed + 4-batch sequence; arm B compacts
+    the seed and the first two batches before the third. Every batch's
     survivor rows and the final index id-set must be digest-identical
     across arms."""
     import hashlib
 
-    from yaetos_spark.operators.dedup import (
-        build_signature_index,
-        dedup_against_index,
-        vacuum_signature_index,
-    )
+    from yaetos_spark.operators.dedup import minhash_signatures
+    from yaetos_spark.streaming.batches import append_batch_exactly_once, compact_batches
+    from yaetos_spark.streaming.dedup import dedup_against_index
 
     def batch_docs(k):
         rows = []
@@ -896,7 +897,7 @@ def test_vacuum_mid_sequence_preserves_survivors(spark, tmp_path):
                 rows.append((did, f"seed document number {i} with stable words {i % 7}"))
             elif i % 3 == 1 and k >= 2:
                 # near-dup of an earlier BATCH survivor — exercises the
-                # appended (post-double-append / post-vacuum) index rows
+                # batch rows (post-compaction: the -1 history rows)
                 rows.append((did, f"batch 0 fresh doc {i} unique payload {i * 13}"))
             else:
                 rows.append((did, f"batch {k} fresh doc {i} unique payload {i * 13 + k}"))
@@ -913,95 +914,54 @@ def test_vacuum_mid_sequence_preserves_survivors(spark, tmp_path):
 
     survivor_digests: dict[str, list[str]] = {}
     index_ids: dict[str, set] = {}
-    for arm in ("control", "vacuumed"):
+    for arm in ("control", "compacted"):
         idx = str(tmp_path / f"idx_{arm}")
-        build_signature_index(seed, idx)
+        append_batch_exactly_once(minhash_signatures(seed), 0, idx)
         digests = []
         for k in range(4):
-            if k == 2:
-                # crash-retry shape: the seed append lands twice
-                build_signature_index(seed, idx, mode="append")
-                if arm == "vacuumed":
-                    stats = vacuum_signature_index(spark, idx)
-                    assert stats["rows_after"] < stats["rows_before"]
-            digests.append(digest(dedup_against_index(batch_docs(k), idx)))
+            if k == 2 and arm == "compacted":
+                compact_batches(spark, idx, 2, lambda sigs: sigs)
+            digests.append(digest(dedup_against_index(batch_docs(k), k + 1, idx)))
         survivor_digests[arm] = digests
         index_ids[arm] = {r.id for r in spark.read.parquet(idx).select("id").collect()}
 
-    assert survivor_digests["control"] == survivor_digests["vacuumed"]
-    assert index_ids["control"] == index_ids["vacuumed"]
+    assert survivor_digests["control"] == survivor_digests["compacted"]
+    assert index_ids["control"] == index_ids["compacted"]
 
 
 def test_vacuum_lock_blocks_concurrent_append(spark, tmp_path):
-    """ADVICE r10: an append landing between vacuum's read and its
-    rename swap is silently lost. The advisory lock sentinel turns the
-    cron-overlap case into a loud error on BOTH sides: a dedup batch
-    refuses to append while the lock exists, and a second vacuum
-    refuses to start over an existing lock."""
+    """A batch landing between a compaction's read and its rename swap
+    would be silently lost. The advisory lock sentinel turns that
+    overlap into a loud error on BOTH sides: a batch write refuses
+    while the lock exists, and a second compaction refuses to start
+    over an existing lock."""
     import os
 
     import pytest
 
-    from yaetos_spark.operators.dedup import (
-        build_signature_index,
-        dedup_against_index,
-        vacuum_signature_index,
-    )
+    from yaetos_spark.operators.dedup import minhash_signatures
+    from yaetos_spark.streaming.batches import append_batch_exactly_once, compact_batches
+    from yaetos_spark.streaming.dedup import dedup_against_index
 
     idx = str(tmp_path / "sig_index")
     corpus = spark.createDataFrame(
         [(i, f"lock test doc {i} content {i % 5}") for i in range(10)],
         "doc_id bigint, text string",
     )
-    build_signature_index(corpus, idx)
+    append_batch_exactly_once(minhash_signatures(corpus), 0, idx)
 
-    lock = idx + "__vacuum.lock"
+    lock = idx + "__compact.lock"
     open(lock, "w").close()
     batch = spark.createDataFrame(
         [(500, "fresh text for the locked append")], "doc_id bigint, text string"
     )
-    with pytest.raises(RuntimeError, match="being vacuumed"):
-        dedup_against_index(batch, idx)
+    with pytest.raises(RuntimeError, match="being compacted"):
+        dedup_against_index(batch, 1, idx)
     with pytest.raises(RuntimeError, match="stale lock"):
-        vacuum_signature_index(spark, idx)
+        compact_batches(spark, idx, 0, lambda sigs: sigs)
     os.unlink(lock)
 
     # with the lock gone both proceed normally
-    surv = dedup_against_index(batch, idx)
-    assert surv.count() == 1
-    stats = vacuum_signature_index(spark, idx)
-    assert stats["rows_after"] == stats["rows_before"] == 11
+    assert dedup_against_index(batch, 1, idx).count() == 1
+    assert compact_batches(spark, idx, 1, lambda sigs: sigs) == 11
     assert not os.path.exists(lock)
-
-
-def test_vacuum_file_sizing_scales_by_dedup_ratio(spark, tmp_path):
-    """ADVICE r10: sizing from pre-dedup bytes emits ~half-target
-    files at 2x duplication. With ratio scaling, a fully-doubled index
-    whose DEDUPED bytes fit one target file rewrites to exactly 1
-    file even though raw bytes would have asked for 2."""
-    import os
-
-    from yaetos_spark.operators.dedup import (
-        build_signature_index,
-        vacuum_signature_index,
-    )
-
-    idx = str(tmp_path / "sig_index")
-    corpus = spark.createDataFrame(
-        [(i, f"sizing doc {i} words {i % 3}") for i in range(40)],
-        "doc_id bigint, text string",
-    )
-    build_signature_index(corpus, idx)
-    build_signature_index(corpus, idx, mode="append")  # 2x duplication
-
-    total_bytes = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _d, fs in os.walk(idx)
-        for f in fs
-        if not f.startswith(("_", "."))
-    )
-    # target chosen so raw bytes need 2 files but deduped bytes fit 1
-    target = (total_bytes // 2) + (total_bytes // 8)
-    stats = vacuum_signature_index(spark, idx, target_file_bytes=target)
-    assert stats["rows_after"] * 2 == stats["rows_before"]
-    assert stats["files_after"] == 1

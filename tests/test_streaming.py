@@ -1,4 +1,5 @@
 import os
+import shutil
 from types import SimpleNamespace
 
 import pytest
@@ -939,6 +940,34 @@ def test_streaming_dedup_compaction_pins_static_overwrite(spark, tmp_path, kind)
     assert _batch_ids(case.dir) == {-1}
     # ambient setting restored, not clobbered by the pin
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == prev
+
+
+@pytest.mark.parametrize("kind", sorted(_COMPACTIONS))
+def test_streaming_compaction_failure_leaves_sink_intact(spark, tmp_path, kind):
+    """A compaction whose write fails must leave the sink as it was.
+    ``parquet.writer.version=BOGUS`` reaches the write's hadoop conf
+    and fails the write after the sink was read; an in-place overwrite
+    has deleted the batch partitions by then. Once the conf is gone, a
+    retry completes the fold, replacing whatever an earlier attempt
+    left beside the sink."""
+    case = _COMPACTIONS[kind](spark, str(tmp_path))
+    for b, rows in enumerate(case.batches):
+        case.write(rows, b)
+    ckpt = _commit_batches(tmp_path, 0, 1)
+    before = case.state()
+    spark.conf.set("parquet.writer.version", "BOGUS")
+    try:
+        with pytest.raises(Exception):
+            case.compact(ckpt)
+    finally:
+        spark.conf.unset("parquet.writer.version")
+    assert _batch_ids(case.dir) == {0, 1}
+    assert case.state() == before
+    # an attempt whose write landed beside the sink but never swapped
+    shutil.copytree(case.dir, case.dir + "__compact", dirs_exist_ok=True)
+    case.compact(ckpt)
+    assert case.state() == case.expected()
+    assert _batch_ids(case.dir) == {-1}
 
 
 def test_streaming_dedup_unreadable_index_raises(spark, tmp_path):

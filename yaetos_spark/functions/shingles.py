@@ -54,28 +54,3 @@ def word_ngram_rows(
     n-gram fan-out — two narrow projections, zero shuffles."""
     toked = df.select(F.col(id_col).alias(out_id), tokens(text_col).alias("_toks"))
     return toked.select(out_id, F.explode(ngrams_from_tokens("_toks", n)).alias(out_col))
-
-
-def word_ngrams(col: str, n: int) -> Column:
-    """Distinct word n-gram shingles of a raw text column (convenience;
-    for hot paths prefer :func:`word_ngram_rows`). NULL text behaves
-    like empty text (see ngrams_from_tokens)."""
-    t = f"split(trim(coalesce({col}, '')), '\\\\s+')"
-    expr = (
-        f"CASE WHEN size({t}) < {n} THEN array(concat_ws(' ', {t})) "
-        f"ELSE array_distinct(transform(sequence(1, size({t}) - {n} + 1), "
-        f"i -> concat_ws(' ', slice({t}, i, {n})))) END"
-    )
-    return F.expr(expr)
-
-
-def char_ngrams(col: str, n: int) -> Column:
-    """Distinct character n-gram shingles as array<string>. NULL text
-    behaves like empty text (one ''-shingle, not a vanished row)."""
-    c = f"coalesce({col}, '')"
-    expr = (
-        f"CASE WHEN length({c}) < {n} THEN array({c}) "
-        f"ELSE array_distinct(transform(sequence(1, length({c}) - {n} + 1), "
-        f"i -> substring({c}, i, {n}))) END"
-    )
-    return F.expr(expr)

@@ -645,24 +645,6 @@ def _band_rows(signatures: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     )
 
 
-def build_signature_index(
-    df: DataFrame,
-    index_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Seed (or append to) the persisted minhash-signature index from a
-    corpus — the state that makes dedup INCREMENTAL: new batches check
-    against signatures (tiny: num_hashes longs per doc), never against
-    the 100 TB of text."""
-    minhash_signatures(df, text_col, id_col, n, num_hashes).write.mode(mode).parquet(
-        index_dir
-    )
-
-
 def filter_against_signatures(
     within: DataFrame,
     new_sigs: DataFrame,
@@ -675,10 +657,11 @@ def filter_against_signatures(
     """Drop rows of ``within`` whose minhash signature estimates
     Jaccard >= ``threshold`` against ANY signature in ``old_sigs``
     (banded-LSH candidates first, so only bucket-colliding pairs are
-    estimated). The cross-corpus half of incremental dedup, shared by
-    the batch path (:func:`dedup_against_index`) and the streaming
-    path (``streaming/dedup.py``): every join is an equi-join on band
-    buckets or ids; nothing here touches document text."""
+    estimated). The cross-corpus half of incremental dedup
+    (``streaming/dedup.py::dedup_against_index``) and of the
+    ``incremental_dedup_survivors`` corpus query: every join is an
+    equi-join on band buckets or ids; nothing here touches document
+    text."""
     cand = (
         _band_rows(new_sigs, num_hashes, bands)
         .join(
@@ -720,222 +703,6 @@ def filter_against_signatures(
     return within.join(
         dup_new_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
     )
-
-
-def dedup_against_index(
-    new_docs: DataFrame,
-    index_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    update_index: bool = True,
-) -> DataFrame:
-    """Incremental near-dup dedup — the production shape: dedup a NEW
-    batch within itself (exact-Jaccard, full drop_near_duplicates
-    semantics) and against the persisted index (banded-LSH candidates
-    from signatures, minhash-ESTIMATED Jaccard >= threshold drops the
-    new doc), then append the survivors' signatures so the next batch
-    sees them.  Returns the surviving rows of ``new_docs``.
-
-    Cross-batch verification is signature-estimated (the index stores
-    num_hashes longs per doc, not text — exact verification would mean
-    keeping the corpus online); within-batch stays exact.  Every join
-    is an equi-join on band buckets or ids; the index side is read as
-    a plain columnar scan.
-    """
-    spark = new_docs.sparkSession
-    within = drop_near_duplicates(new_docs, text_col, id_col, n, threshold)
-    # the survivor frame feeds the signature derivation AND the
-    # cross-corpus filter (and through it the returned rows) — without
-    # a checkpoint the whole within-batch jaccard+CC+anti-join pipeline
-    # re-executes per reference. One row per surviving doc: batch-
-    # sized, never the tokenized corpus.
-    within = within.localCheckpoint(eager=True)
-
-    new_sigs = minhash_signatures(within, text_col, id_col, n, num_hashes)
-    # localCheckpoint: the signature agg is reused by candidates AND the
-    # index append, and truncating here keeps the estimate join flat
-    new_sigs = new_sigs.localCheckpoint(eager=True)
-    from yaetos_spark.plans.paths import dataset_exists
-
-    # cold start = the index path does not exist, checked EXPLICITLY
-    # (local or hadoop FS) — never inferred from a failed read, which
-    # would also swallow permission/corruption/transient errors and
-    # silently skip cross-corpus dedup ("raise, don't mislabel")
-    have_index = dataset_exists(index_dir, spark)
-    if have_index:
-        old_sigs = spark.read.parquet(index_dir)
-
-    if have_index:
-        survivors = filter_against_signatures(
-            within, new_sigs, old_sigs, id_col, threshold, num_hashes, bands
-        )
-    else:
-        survivors = within
-
-    if update_index:
-        _raise_if_vacuum_locked(index_dir)
-        surv_sigs = new_sigs.join(
-            survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
-        )
-        surv_sigs.write.mode("append" if have_index else "overwrite").parquet(index_dir)
-    return survivors
-
-
-def _vacuum_lock_path(index_dir: str) -> str:
-    return index_dir.rstrip("/") + "__vacuum.lock"
-
-
-def _raise_if_vacuum_locked(index_dir: str) -> None:
-    """Refuse to append to an index whose vacuum lock sentinel exists —
-    a file appended between vacuum's Spark read and its rename swap
-    would be silently swept into ``__old`` and deleted (data loss).
-    The check is advisory (no OS-level lease; a writer that started
-    before the lock appeared still races — see the vacuum docstring's
-    exclusive-access contract), but it turns the common operational
-    mistake (cron overlap of dedup batches with a vacuum) into a loud
-    error instead of silent loss. Local paths only; object-store
-    indexes can't be vacuumed by this operator in the first place."""
-    import os
-
-    if "://" in index_dir:
-        return
-    lock = _vacuum_lock_path(index_dir)
-    if os.path.exists(lock):
-        raise RuntimeError(
-            f"signature index {index_dir} is being vacuumed (lock file "
-            f"{lock} exists) — retry after the vacuum finishes, or remove "
-            "a stale lock by hand if no vacuum is running"
-        )
-
-
-def vacuum_signature_index(
-    spark,
-    index_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """VACUUM the persisted minhash-signature index: drop duplicate
-    ids and rewrite the directory into right-sized files.
-
-    Why it exists: :func:`dedup_against_index` APPENDS each batch's
-    survivor signatures, so across N batches the index accumulates N
-    small-file writes (scan cost grows with file count — task-per-file
-    scheduling, footer reads) and a re-run of an already-ingested batch
-    double-appends identical rows. Signatures are deterministic given
-    (text, n, num_hashes), so duplicate ids are byte-identical rows and
-    ``dropDuplicates(["id"])`` is lossless; the rewrite targets
-    ``target_file_bytes`` per file from the input's ACTUAL bytes
-    (filesystem metadata — no data pass), scaled by the dedup ratio
-    ``rows_after / rows_before`` so a heavily-duplicated index (the
-    double-appended re-run case this job exists for) still comes out
-    at target-sized files rather than half-sized ones.
-
-    EXCLUSIVE ACCESS REQUIRED: the vacuum takes an advisory lock
-    sentinel (``<dir>__vacuum.lock``) that ``dedup_against_index``
-    checks before appending, so a concurrent batch fails loudly
-    instead of having its append swept into ``__old`` and deleted by
-    the swap. The lock is advisory — a dedup batch that started
-    BEFORE the lock appeared can still land an append inside the
-    read→swap window and lose it — so schedule vacuums in a quiet
-    window (no dedup batches in flight), exactly like any offline
-    compaction.
-
-    Swap discipline: the compacted index is written BESIDE the live
-    one (``<dir>__vacuum``), then swapped in with two renames
-    (live → ``__old``, ``__vacuum`` → live). The live index is
-    readable until the FIRST rename; between the two renames the
-    index path briefly does not exist, so a reader racing the swap
-    (or a crash exactly between the renames) finds no live directory
-    — recovery is manual but trivial and lossless: rename ``__old``
-    (or ``__vacuum``) back. A crash anywhere else leaves the old
-    index fully intact. Local-filesystem paths only (the incremental
-    index in this repo is local/HDFS-style; object-store indexes
-    should use the run-stamped ``{{latest}}`` convention instead,
-    where retention_job handles cleanup).
-
-    Returns ``{rows_before, rows_after, files_before, files_after}``.
-    """
-    import os
-    import shutil
-
-    if "://" in index_dir:
-        raise ValueError(
-            "vacuum_signature_index supports local-filesystem index paths "
-            "only; for object stores write run-stamped snapshots and point "
-            "{{latest}} at the newest (see jobs/generic/retention_job.py)"
-        )
-
-    def _stats(path: str) -> tuple[int, int]:
-        n_files, n_bytes = 0, 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(root, f))
-        return n_files, n_bytes
-
-    lock = _vacuum_lock_path(index_dir)
-    try:
-        # O_EXCL: a second concurrent vacuum (or a stale lock from a
-        # crashed one) fails loudly here rather than racing the swap
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.close(fd)
-    except FileExistsError:
-        raise RuntimeError(
-            f"vacuum lock {lock} already exists — another vacuum is "
-            "running, or a crashed one left a stale lock (remove it by "
-            "hand after checking no vacuum is in flight)"
-        )
-    try:
-        files_before, bytes_before = _stats(index_dir)
-        sigs = spark.read.parquet(index_dir)
-        rows_before = sigs.count()
-        # persist: the dedup result feeds the sizing count AND the
-        # rewrite — without it the dropDuplicates shuffle runs twice
-        deduped = sigs.dropDuplicates(["id"]).persist()
-        rows_dedup = deduped.count()
-        # scale bytes by the dedup ratio: post-vacuum bytes ≈
-        # bytes_before * rows_after/rows_before (signature rows are
-        # fixed-width, so bytes track rows) — sizing from raw
-        # bytes_before would emit half-target files at 2x duplication
-        est_bytes = bytes_before * rows_dedup // max(1, rows_before)
-        n_files = max(1, -(-est_bytes // max(1, target_file_bytes)))
-        tmp = index_dir.rstrip("/") + "__vacuum"
-        old = index_dir.rstrip("/") + "__old"
-        deduped.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        deduped.unpersist()
-        # re-read what actually landed on disk: catches a short write,
-        # not just a planning bug
-        rows_after = spark.read.parquet(tmp).count()
-        if rows_after != rows_dedup:
-            raise RuntimeError(
-                f"vacuum_signature_index wrote {rows_after} rows but the "
-                f"dedup planned {rows_dedup} — aborting before the swap"
-            )
-        if rows_after > rows_before:
-            raise RuntimeError(
-                f"vacuum_signature_index wrote MORE rows than it read "
-                f"({rows_after} > {rows_before}) — aborting before the swap"
-            )
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(index_dir, old)
-        os.rename(tmp, index_dir)
-        shutil.rmtree(old)
-        files_after, _ = _stats(index_dir)
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": files_after,
-    }
 
 
 # -- exact duplicated substrings (ExactSubstr) -------------------------

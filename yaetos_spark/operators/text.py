@@ -162,7 +162,6 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 8,
     window: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every k-char gram of the
@@ -179,32 +178,16 @@ def winnow_fingerprints(
     ``_let``-bound so each is computed once per document regardless of
     how Catalyst collapses the projections.
 
-    ``hash_fn`` picks the k-gram hash:
-
-    - ``"md5"`` (default): engine-portable — DuckDB replicates it
-      bit-for-bit, which is what the oracle contract query needs. The
-      price is one full md5 per character position; at the 100x
-      replica the fingerprint scan is hash-bound (~90 s).
-    - ``"xxhash64"``: Spark's built-in 64-bit xxHash — stays inside
-      whole-stage codegen with no hex/conv round-trip and uses the
-      full 64-bit space (md5's conv(substr,1,8) keeps 32 bits). Same
-      winnowing guarantees (any shared substring of length >=
-      k + window - 1 still collides on a shared fingerprint); only
-      the fingerprint VALUES differ, so don't mix the two hash spaces
-      in one index. Measured honestly (100x replica, interleaved):
-      the fingerprint scan is bound by the per-position substring/
-      transform machinery, NOT the hash — xxhash64 is only ~5-13%
-      faster (fps-only 63/56 s -> 55/54 s). Pick it for the hash
-      space and codegen-native type; the md5 default's real cost is
-      cross-engine oracle parity, not throughput.
+    The k-gram hash is engine-portable md5 (its first 32 bits): DuckDB
+    replicates it bit-for-bit, which is what the oracle contract query
+    needs. The price is one full md5 per character position; at the
+    100x replica the fingerprint scan is bound by the per-position
+    substring/transform machinery, which
+    :func:`winnow_fingerprints_rolling` removes.
     """
-    if hash_fn == "md5":
-        def _hash(s: Column) -> Column:
-            return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    elif hash_fn == "xxhash64":
-        _hash = F.xxhash64
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+
+    def _hash(s: Column) -> Column:
+        return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
     def kgrams_of(nrm: Column) -> Column:
         # explicit +1 step: sequence() defaults to step -1 when
@@ -515,8 +498,8 @@ def winnow_fingerprints_rolling(
     """Winnowing fingerprints via a TRUE rolling polynomial hash in an
     Arrow-vectorized ``mapInPandas`` stage — the different-SHAPE
     production path the r10 hash A/B pointed at: swapping md5 for
-    xxhash64 inside the SQL formulation bought only ~5-13% because the
-    per-position ``substring`` + ``transform`` machinery dominates;
+    another hash inside the SQL formulation bought only ~5-13% because
+    the per-position ``substring`` + ``transform`` machinery dominates;
     this variant removes that machinery entirely. Per document, the
     normalized bytes become one numpy array, the k-gram hashes are one
     stride-tricked (n-k+1, k) @ weights matmul in uint64 (wraparound
@@ -529,8 +512,8 @@ def winnow_fingerprints_rolling(
     :func:`winnow_fingerprints` (any shared substring of length >=
     k + window - 1 yields a shared fingerprint; short docs contribute
     min-of-all; docs whose normalized text is shorter than ``k`` emit
-    nothing) — but a THIRD hash space: never mix its output with the
-    md5 or xxhash64 indexes. Normalization mirrors
+    nothing) — but a different hash space: never mix its output with
+    the md5 index. Normalization mirrors
     ``functions/hashing.normalize_text`` (lower, non-alphanumeric runs
     -> one space, trim) in Python; after the [^a-z0-9]+ regex the text
     is pure ASCII, so byte positions equal character positions. (Exotic

@@ -3,11 +3,11 @@
 Behavior parity with the reference's Flow (reference:
 yaetos/etl_utils.py:1418-1518): build the global job graph from every
 registry entry's ``dependencies`` list, extract the ancestor subtree of
-the target job, execute leaf-first, all in one SparkSession. With
-``chain_dependencies`` the upstream output DataFrame is handed to the
-downstream job in memory (keyed by the input's ``from:`` field) instead
-of a disk round-trip — which also lets Catalyst fuse the plans across
-"jobs", since DataFrames compose lazily.
+the target job, execute leaf-first, all in one SparkSession. The
+upstream output DataFrame is handed to the downstream job in memory
+(keyed by the input's ``from:`` field) instead of a disk round-trip —
+which also lets Catalyst fuse the plans across "jobs", since
+DataFrames compose lazily.
 """
 
 from __future__ import annotations
@@ -34,9 +34,8 @@ def execution_order(registry: Registry, target_job: str) -> list[str]:
 
 
 class Flow:
-    def __init__(self, registry: Registry, chain_dependencies: bool = True):
+    def __init__(self, registry: Registry):
         self.registry = registry
-        self.chain = chain_dependencies
 
     def run_pipeline(
         self,
@@ -57,9 +56,7 @@ class Flow:
         last = None
         for job_name in order:
             params = self.registry.job_params(job_name, mode=mode, cmd_args=cmd_args)
-            if self.chain:
-                params = dict(params)
-                params["_loaded_inputs"] = outputs
+            params["_loaded_inputs"] = outputs
             job = job_factory(job_name, params)
             last = job.etl(spark)
             outputs[job_name] = last

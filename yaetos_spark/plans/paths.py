@@ -14,6 +14,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import re
+import shutil
 
 NOW_FMT = "date%Y%m%d_time%H%M%S_utc"
 
@@ -33,14 +34,8 @@ def to_spark_path(path: str) -> str:
 
 def list_subfolders(parent: str, spark=None) -> list[str]:
     """Immediate subfolder names of ``parent`` (local or hadoop FS)."""
-    if is_s3_path(parent) or "://" in parent:
-        if spark is None:
-            raise ValueError("listing a remote path requires a SparkSession")
-        jvm = spark._jvm
-        jsc = spark._jsc
-        conf = jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(to_spark_path(parent))
-        fs = p.getFileSystem(conf)
+    if _is_remote(parent):
+        fs, p = _hadoop_fs(parent, spark)
         if not fs.exists(p):
             return []
         return [s.getPath().getName() for s in fs.listStatus(p) if s.isDirectory()]
@@ -55,13 +50,9 @@ def path_exists(path: str, spark=None) -> bool:
     written yet' (a legitimate cold start) from a FAILED read of an
     existing dataset — the two must never share an except branch, or a
     transient FS error silently degrades into 'no data'."""
-    if is_s3_path(path) or "://" in path:
-        if spark is None:
-            raise ValueError("checking a remote path requires a SparkSession")
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(to_spark_path(path))
-        return p.getFileSystem(conf).exists(p)
+    if _is_remote(path):
+        fs, p = _hadoop_fs(path, spark)
+        return fs.exists(p)
     return os.path.exists(path)
 
 
@@ -102,19 +93,48 @@ def dataset_exists(path: str, spark=None) -> bool:
 def list_file_names(path: str, spark=None) -> list[str]:
     """Base names of the entries directly under ``path`` (files and
     dirs), local or hadoop FS; [] when the path does not exist."""
-    if is_s3_path(path) or "://" in path:
-        if spark is None:
-            raise ValueError("listing a remote path requires a SparkSession")
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(to_spark_path(path))
-        fs = p.getFileSystem(conf)
+    if _is_remote(path):
+        fs, p = _hadoop_fs(path, spark)
         if not fs.exists(p):
             return []
         return [s.getPath().getName() for s in fs.listStatus(p)]
     if not os.path.isdir(path):
         return []
     return os.listdir(path)
+
+
+def rename_path(src: str, dst: str, spark=None) -> None:
+    """Rename ``src`` to ``dst`` (local or hadoop FS); raises if the
+    filesystem refuses, since hadoop's ``rename`` reports failure by
+    returning False rather than raising."""
+    if _is_remote(src):
+        fs, p = _hadoop_fs(src, spark)
+        if not fs.rename(p, _hadoop_fs(dst, spark)[1]):
+            raise OSError(f"rename {src} -> {dst} failed")
+    else:
+        os.rename(src, dst)
+
+
+def remove_tree(path: str, spark=None) -> None:
+    """Delete ``path`` and everything under it; a missing path is a
+    no-op (local or hadoop FS)."""
+    if _is_remote(path):
+        fs, p = _hadoop_fs(path, spark)
+        fs.delete(p, True)
+    elif os.path.exists(path):
+        shutil.rmtree(path)
+
+
+def _is_remote(path: str) -> bool:
+    return "://" in path
+
+
+def _hadoop_fs(path: str, spark):
+    """(FileSystem, Path) of a hadoop-backed ``path``."""
+    if spark is None:
+        raise ValueError(f"a remote path ({path}) requires a SparkSession")
+    p = spark._jvm.org.apache.hadoop.fs.Path(to_spark_path(path))
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def expand_latest(path: str, spark=None) -> str:
@@ -147,8 +167,6 @@ def expand_path(path: str, params: dict | None = None, now: dt.datetime | None =
         path = path.replace("{{" + k + "}}", str(v))
     path = expand_now(path, now)
     path = expand_latest(path, spark)
-    import re
-
     leftover = re.findall(r"\{\{[^{}]*\}\}", path)
     if leftover:
         raise ValueError(

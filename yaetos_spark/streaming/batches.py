@@ -1,8 +1,10 @@
-"""The exactly-once batch sink shared by the streaming jobs.
+"""The exactly-once batch sink shared by the streaming jobs and the
+batch incremental-dedup index.
 
 ``foreachBatch`` is at-least-once: a batch whose sink writes landed but
-whose checkpoint commit did not is replayed on restart. The recipe for
-a non-transactional parquet sink has three parts, all here:
+whose checkpoint commit did not is replayed on restart; a batch job
+that failed after its first write is re-run. The recipe for a
+non-transactional parquet sink has three parts, all here:
 
 - every batch lands in its OWN ``_batch_id=<id>`` partition through a
   dynamic partition overwrite (``append_batch_exactly_once``), so a
@@ -10,9 +12,10 @@ a non-transactional parquet sink has three parts, all here:
   appending duplicates — the batch id in the layout is the commit
   marker;
 - readers see the union of all partitions (merge-on-read);
-- compaction (``compact_batches``) folds only the batches the
-  checkpoint has COMMITTED into one ``_batch_id=-1`` history partition,
-  so a batch that is still due for replay keeps its own partition.
+- compaction (``compact_batches``) folds the batches up to a given id
+  into one ``_batch_id=-1`` history partition, written beside the sink
+  and swapped in by rename, so a failed compaction leaves the sink as
+  it was.
 
 The overwrite mode is an option of each write, never the session-wide
 ``spark.sql.sources.partitionOverwriteMode``, so a sink's result does
@@ -21,19 +24,34 @@ not depend on what the session was set to.
 
 from __future__ import annotations
 
+import contextlib
+import os
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from yaetos_spark.plans.paths import list_file_names
+from yaetos_spark.plans.paths import list_file_names, remove_tree, rename_path
 
 BATCH_COL = "_batch_id"
 
 
+def _lock_path(out_dir: str) -> str:
+    return out_dir.rstrip("/") + "__compact.lock"
+
+
 def append_batch_exactly_once(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
     """Land one micro-batch in its own ``_batch_id`` partition; a
-    replay of the same batch id rewrites that partition only."""
+    replay of the same batch id rewrites that partition only. Refuses
+    to write while a compaction of ``out_dir`` holds its lock: the swap
+    would drop a partition written after the compaction's read."""
+    lock = _lock_path(out_dir)
+    if "://" not in out_dir and os.path.exists(lock):
+        raise RuntimeError(
+            f"{out_dir} is being compacted (lock file {lock} exists) — "
+            "retry after the compaction finishes, or remove a stale lock "
+            "by hand if none is running"
+        )
     (
         batch_df.withColumn(BATCH_COL, F.lit(int(batch_id)))
         .write.mode("overwrite")
@@ -61,51 +79,96 @@ def last_committed_batch(spark, checkpoint_dir: str) -> int | None:
     return max(ids, default=None)
 
 
+@contextlib.contextmanager
+def _compaction_lock(out_dir: str):
+    """Hold ``<dir>__compact.lock`` (O_EXCL) for a compaction: a second
+    compaction, or a stale lock from a crashed one, fails loudly. The
+    lock is advisory and local paths only; a remote sink is not
+    locked."""
+    if "://" in out_dir:
+        yield
+        return
+    lock = _lock_path(out_dir)
+    try:
+        os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+    except FileExistsError:
+        raise RuntimeError(
+            f"compaction lock {lock} already exists — another compaction "
+            "is running, or a crashed one left a stale lock (remove it by "
+            "hand after checking none is in flight)"
+        ) from None
+    try:
+        yield
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(lock)
+
+
 def compact_batches(
     spark,
     out_dir: str,
-    checkpoint_dir: str,
+    through_batch: int | None,
     merge: Callable[[DataFrame], DataFrame],
-) -> None:
-    """Fold the COMMITTED batch partitions of ``out_dir`` into a single
-    ``_batch_id=-1`` history partition, so merge-on-read stays O(1)
-    partitions as batches accumulate. Run it between streaming runs.
+) -> int | None:
+    """Fold the batch partitions ``<= through_batch`` of ``out_dir``
+    into a single ``_batch_id=-1`` history partition, so merge-on-read
+    stays O(1) partitions as batches accumulate; later batches keep
+    their own partitions. Returns the sink's row count after the fold;
+    ``through_batch=None`` is a no-op (returns None).
 
-    ``merge`` maps the committed rows (batch column dropped) to the
+    ``merge`` maps the folded rows (batch column dropped) to the
     history rows: identity for an append-only sink, a cell sum for a
     count-min sketch, a register max for HLL. Re-running compaction is
-    idempotent because every merge here is.
+    idempotent because every merge here is. File sizes come from
+    Spark's scan packing (``spark.sql.files.maxPartitionBytes``).
 
-    Only batches <= ``last_committed_batch`` are folded. A batch written
-    by a FAILED attempt (sink data landed, checkpoint commit did not)
-    will be replayed on restart and rewrites its own partition; had it
-    been folded into -1, the replay would add its rows a second time
-    (and the dedup index's ``_batch_id != batch_id`` replay guard would
-    see its own signatures). With nothing committed there is nothing
-    safe to fold.
+    A folded batch can no longer be replayed: its rows now sit in -1,
+    so a replay would add them a second time (and the dedup index's
+    ``_batch_id != batch_id`` replay guard would see its own
+    signatures). Pass the highest batch id that will never be re-run —
+    for a stream, ``last_committed_batch`` of its checkpoint.
 
-    localCheckpoint before the overwrite avoids reading the files being
-    replaced. The write is pinned ``static`` (full-directory replace):
-    a dynamic overwrite would replace only the partitions present in
-    the merged frame and leave the folded batch partitions in place,
-    counting them twice."""
-    last = last_committed_batch(spark, checkpoint_dir)
-    if last is None:
-        return
-    data = spark.read.parquet(out_dir)
-    fold = merge(data.where(F.col(BATCH_COL) <= last).drop(BATCH_COL))
-    keep = data.where(F.col(BATCH_COL) > last)
-    merged = (
-        fold.withColumn(BATCH_COL, F.lit(-1))
-        .unionByName(keep)
-        .localCheckpoint(eager=True)
-    )
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(BATCH_COL)
-        .parquet(out_dir)
-    )
+    Swap discipline: the folded sink is written BESIDE the live one
+    (``<dir>__compact``, a static overwrite, so leftovers of a failed
+    attempt go), its landed row count is checked against the rows
+    written, then two renames swap it in (live -> ``<dir>__old``,
+    ``__compact`` -> live) and the old directory is deleted. A failure
+    before the first rename leaves the live sink untouched. Between the
+    two renames the sink path does not exist; a crash there is
+    recovered by hand, losslessly, by renaming ``__old`` (or
+    ``__compact``) back. The sink must not be written during the fold:
+    ``append_batch_exactly_once`` refuses while the lock exists, but a
+    write that started before the lock was taken can still land in the
+    old directory and be dropped, so compact between runs."""
+    if through_batch is None:
+        return None
+    out_dir = out_dir.rstrip("/")
+    tmp, old = out_dir + "__compact", out_dir + "__old"
+    with _compaction_lock(out_dir):
+        data = spark.read.parquet(out_dir)
+        fold = merge(data.where(F.col(BATCH_COL) <= int(through_batch)).drop(BATCH_COL))
+        keep = data.where(F.col(BATCH_COL) > int(through_batch))
+        written = Observation()
+        (
+            fold.withColumn(BATCH_COL, F.lit(-1))
+            .unionByName(keep)
+            .observe(written, F.count(F.lit(1)).alias("rows"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy(BATCH_COL)
+            .parquet(tmp)
+        )
+        rows = spark.read.parquet(tmp).count()
+        if rows != written.get["rows"]:
+            raise RuntimeError(
+                f"compaction of {out_dir} wrote {written.get['rows']} rows "
+                f"but {rows} landed in {tmp} — aborting before the swap"
+            )
+        remove_tree(old, spark)
+        rename_path(out_dir, old, spark)
+        rename_path(tmp, out_dir, spark)
+        remove_tree(old, spark)
+    return rows
 
 
 def start_batch_stream(

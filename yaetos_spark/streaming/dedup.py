@@ -1,30 +1,33 @@
-"""Streaming incremental corpus dedup — continuous document ingestion
-through a persisted minhash-signature index, exactly-once.
+"""Incremental corpus dedup — every batch, streamed or scheduled,
+deduplicated through one persisted minhash-signature index,
+exactly-once.
 
 The production shape for a training corpus that grows forever: each
-micro-batch is deduplicated WITHIN itself (exact n-gram Jaccard, the
-full ``drop_near_duplicates`` semantics) and AGAINST everything already
+batch is deduplicated WITHIN itself (exact n-gram Jaccard, the full
+``drop_near_duplicates`` semantics) and AGAINST everything already
 accepted (banded-LSH candidates over the signature index — the index
 stores ``num_hashes`` longs per doc, never text, so the 100 TB corpus
-is never re-scanned). Survivors and their signatures land atomically
-per batch.
+is never re-scanned). ``dedup_against_index`` is that per-batch recipe;
+the stream (``streaming_dedup``) and the registry job
+(``jobs/examples/incremental_dedup_job.py``) both call it.
 
-Exactly-once: ``foreachBatch`` is at-least-once, and naive appends
-would break a replay twice over — the replayed batch's own signatures
-from the failed attempt are already in the index, so every replayed doc
-would "collide" with itself (estimated Jaccard 1.0) and be dropped; and
-the index would hold its signatures twice. The sink is the shared one
-in ``batches.py``: each batch writes survivors and signatures into its
-OWN ``_batch_id`` partition (replay rewrites identical content — the
-dedup decisions are deterministic), and the against-index read
-EXCLUDES the current batch id (partition-pruned scan), so a replay
-sees exactly the pre-batch index state.
+Exactly-once: a batch may run twice (``foreachBatch`` is at-least-once;
+a failed job is re-run), and naive appends would break the re-run twice
+over — its own signatures from the first attempt are already in the
+index, so every doc would "collide" with itself (estimated Jaccard 1.0)
+and be dropped; and the index would hold its signatures twice. The
+index is the shared sink in ``batches.py``: each batch writes its
+survivors' signatures into its OWN ``_batch_id`` partition (a re-run
+rewrites identical content — the dedup decisions are deterministic),
+and the against-index read EXCLUDES the current batch id
+(partition-pruned scan), so a re-run sees exactly the pre-batch index
+state. An index without the ``_batch_id`` layout fails on first use.
 
 Scale notes: the per-batch work is the batch-sized shingle join plus
 one band-keyed equi-join against the index band rows — linear in batch
 size and index size, all shuffle-partitioned; the index read prunes the
-replay partition at the directory level. Compaction of many small batch
-partitions is layout work for ``jobs/generic/compact_job.py``.
+replay partition at the directory level. ``compact_index`` folds
+finished batch partitions into one history partition.
 """
 
 from __future__ import annotations
@@ -42,8 +45,67 @@ from yaetos_spark.streaming.batches import (
     BATCH_COL,
     append_batch_exactly_once,
     compact_batches,
+    last_committed_batch,
     start_batch_stream,
 )
+
+
+def dedup_against_index(
+    docs: DataFrame,
+    batch_id: int,
+    index_dir: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.5,
+    num_hashes: int = 16,
+    bands: int = 4,
+) -> DataFrame:
+    """Dedup one batch: within-batch dedup → drop docs whose
+    signature-estimated Jaccard clears ``threshold`` against the index
+    (excluding this batch's own partition — the replay guard) → land
+    the survivors' signatures in this batch's index partition. Returns
+    the surviving rows of ``docs``; re-running a batch id returns the
+    same rows and leaves the index as the first run left it.
+
+    Cross-batch verification is signature-estimated (exact verification
+    would mean keeping the corpus online); within-batch stays exact."""
+    spark = docs.sparkSession
+    # the within-batch survivors feed the signatures AND the
+    # cross-batch filter; without a checkpoint the jaccard + CC +
+    # anti-join pipeline re-executes per reference. One row per
+    # surviving doc: batch-sized, never the tokenized corpus.
+    within = drop_near_duplicates(docs, text_col, id_col, n, threshold).localCheckpoint(
+        eager=True
+    )
+    new_sigs = minhash_signatures(
+        within, text_col, id_col, n, num_hashes
+    ).localCheckpoint(eager=True)
+
+    # cold start is detected by an EXPLICIT existence check, never by
+    # catching the read error: a bare except here would also swallow
+    # permission failures, corrupt footers, and transient FS errors,
+    # silently skipping cross-batch dedup for the batch and admitting
+    # duplicates into the corpus forever ("raise, don't mislabel" —
+    # same standard as graph.py's non-convergence guard). A failed
+    # read of an EXISTING index fails the batch, and the re-run
+    # retries it.
+    survivors = within
+    if dataset_exists(index_dir, spark):
+        old_sigs = spark.read.parquet(index_dir).where(
+            F.col(BATCH_COL) != int(batch_id)
+        )
+        # materialize the decisions ONCE so the index write and the
+        # caller's survivors write cannot diverge
+        survivors = filter_against_signatures(
+            within, new_sigs, old_sigs, id_col, threshold, num_hashes, bands
+        ).localCheckpoint(eager=True)
+
+    surv_sigs = new_sigs.join(
+        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
+    )
+    append_batch_exactly_once(surv_sigs, batch_id, index_dir)
+    return survivors
 
 
 def dedup_batch_exactly_once(
@@ -58,43 +120,12 @@ def dedup_batch_exactly_once(
     num_hashes: int = 16,
     bands: int = 4,
 ) -> None:
-    """Process one micro-batch: within-batch dedup → drop docs whose
-    signature-estimated Jaccard clears ``threshold`` against the index
-    (excluding this batch's own partition — the replay guard) → land
-    survivors and their signatures in this batch's partitions."""
-    spark = batch_df.sparkSession
-    within = drop_near_duplicates(batch_df, text_col, id_col, n, threshold)
-    new_sigs = minhash_signatures(
-        within, text_col, id_col, n, num_hashes
-    ).localCheckpoint(eager=True)
-
-    # cold start is detected by an EXPLICIT existence check, never by
-    # catching the read error: a bare except here would also swallow
-    # permission failures, corrupt footers, and transient FS errors,
-    # silently skipping cross-batch dedup for the batch and admitting
-    # duplicates into the corpus forever ("raise, don't mislabel" —
-    # same standard as graph.py's non-convergence guard). A failed
-    # read of an EXISTING index now fails the batch, and the stream's
-    # at-least-once retry re-runs it.
-    have_index = dataset_exists(index_dir, spark)
-    if have_index:
-        old_sigs = spark.read.parquet(index_dir).where(
-            F.col(BATCH_COL) != int(batch_id)
-        )
-        survivors = filter_against_signatures(
-            within, new_sigs, old_sigs, id_col, threshold, num_hashes, bands
-        )
-    else:
-        survivors = within
-    # materialize the decisions ONCE so the two writes below cannot
-    # diverge (both consume this frame, not the live plan)
-    survivors = survivors.localCheckpoint(eager=True)
-
-    surv_sigs = new_sigs.join(
-        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
+    """Process one micro-batch: :func:`dedup_against_index`, then land
+    the survivors in this batch's ``survivors_dir`` partition."""
+    survivors = dedup_against_index(
+        batch_df, batch_id, index_dir, text_col, id_col, n, threshold, num_hashes, bands
     )
     append_batch_exactly_once(survivors, batch_id, survivors_dir)
-    append_batch_exactly_once(surv_sigs, batch_id, index_dir)
 
 
 def streaming_dedup(
@@ -136,14 +167,16 @@ def read_survivors(spark, survivors_dir: str) -> DataFrame:
 
 
 def compact_index(spark, index_dir: str, checkpoint_dir: str) -> None:
-    """Fold the COMMITTED batch partitions of the signature index into
-    the ``_batch_id=-1`` history partition (``batches.compact_batches``),
-    so the against-index scan stays O(1) partitions as batches
-    accumulate. Run it between streaming runs.
+    """Fold the batch partitions the stream's checkpoint has COMMITTED
+    into the ``_batch_id=-1`` history partition
+    (``batches.compact_batches``), so the against-index scan stays O(1)
+    partitions as batches accumulate. Run it between streaming runs.
 
     Folding a batch that is still due for replay would defeat the
     ``_batch_id != batch_id`` replay exclusion: every replayed doc would
     collide with its own failed-attempt signature at estimated Jaccard
     1.0 and the whole batch would silently vanish. The fold spares
     uncommitted batches, so the guard stays sound across compaction."""
-    compact_batches(spark, index_dir, checkpoint_dir, lambda sigs: sigs)
+    compact_batches(
+        spark, index_dir, last_committed_batch(spark, checkpoint_dir), lambda sigs: sigs
+    )

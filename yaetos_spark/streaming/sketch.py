@@ -32,6 +32,7 @@ from yaetos_spark.operators.sketches import (
 from yaetos_spark.streaming.batches import (
     append_batch_exactly_once,
     compact_batches,
+    last_committed_batch,
     start_batch_stream,
 )
 
@@ -92,7 +93,9 @@ def compact_count_min(spark, sketch_dir: str, checkpoint_dir: str) -> None:
     ``_batch_id=-1`` history partition by cell sum
     (``batches.compact_batches``); uncommitted batches keep their
     partitions, so a replay cannot count them twice."""
-    compact_batches(spark, sketch_dir, checkpoint_dir, _sum_cells)
+    compact_batches(
+        spark, sketch_dir, last_committed_batch(spark, checkpoint_dir), _sum_cells
+    )
 
 
 def hll_batch_exactly_once(
@@ -142,7 +145,9 @@ def read_hll(spark, sketch_dir: str) -> DataFrame:
 def compact_hll(spark, sketch_dir: str, checkpoint_dir: str) -> None:
     """Fold the committed batches into ``_batch_id=-1`` by register max
     (``batches.compact_batches``)."""
-    compact_batches(spark, sketch_dir, checkpoint_dir, _max_registers)
+    compact_batches(
+        spark, sketch_dir, last_committed_batch(spark, checkpoint_dir), _max_registers
+    )
 
 
 def topk_batch_exactly_once(
