@@ -3,9 +3,10 @@
 merge table (``keep: merges`` — feed it to downstream tokenize runs)
 or tokenize the corpus with it (``keep: tokens``, the default).
 
-Training cost is one corpus-scale word count + ``n_merges`` rounds of
-word-table aggregation (corpus-size-independent after the first pass);
-fit on a deterministic sample for production vocab sizes.
+Training cost is one corpus-scale Spark word count; the merge rounds
+run on the driver over the collected distinct-word table, so the table
+must fit there: fit on a deterministic sample (at most ~10^6 distinct
+words) for production corpora.
 See yaetos_spark/operators/tokenizer.py.
 """
 

@@ -875,6 +875,39 @@ def test_vacuum_signature_index(spark, tmp_path):
     assert {r.doc_id for r in dedup_against_index(probe, 10, idx).collect()} == {9002}
 
 
+def test_compact_batches_folds_small_batches_into_one_file(spark, tmp_path):
+    """Folding a few small batches writes ONE history file: the fold is
+    coalesced by its input bytes, not left to Spark's scan packing,
+    which gives every small file its own write task. Rows, ids and the
+    unfolded batch are unchanged."""
+    import os
+
+    from yaetos_spark.operators.dedup import minhash_signatures
+    from yaetos_spark.streaming.batches import append_batch_exactly_once, compact_batches
+
+    idx = str(tmp_path / "sig_index")
+    corpus = spark.createDataFrame(
+        [(i, f"small batch document {i} words {i % 3}") for i in range(20)],
+        "doc_id bigint, text string",
+    )
+    sigs = minhash_signatures(corpus).localCheckpoint()
+    for b in range(4):
+        append_batch_exactly_once(sigs.where(f"id % 4 = {b}").coalesce(1), b, idx)
+    assert [_count_files(os.path.join(idx, f"_batch_id={b}")) for b in range(4)] == [1] * 4
+
+    before = spark.read.parquet(idx)
+    ids_before = sorted(r.id for r in before.select("id").collect())
+    rows_before = sorted(map(repr, before.drop("_batch_id").collect()))
+
+    assert compact_batches(spark, idx, 2, lambda sigs: sigs) == len(ids_before)
+    assert _count_files(os.path.join(idx, "_batch_id=-1")) == 1
+    assert _count_files(os.path.join(idx, "_batch_id=3")) == 1
+    after = spark.read.parquet(idx)
+    assert sorted(r.id for r in after.select("id").collect()) == ids_before
+    assert sorted(map(repr, after.drop("_batch_id").collect())) == rows_before
+    assert {r._batch_id for r in after.select("_batch_id").distinct().collect()} == {-1, 3}
+
+
 def test_vacuum_mid_sequence_preserves_survivors(spark, tmp_path):
     """A compaction dropped into the middle of an incremental-dedup
     batch sequence must never change RESULTS, only file layout. Two

@@ -1,6 +1,7 @@
-"""BPE tokenizer induction tests — the distributed trainer vs an
-independent pure-python Sennrich-style reference (merge sequence AND
-resulting segmentations), plus encoder/contract checks."""
+"""BPE tokenizer induction tests — the trainer (Spark word count +
+driver-side incremental merges) vs an independent pure-python
+Sennrich-style reference (merge sequence AND resulting
+segmentations), plus encoder/contract and Spark-job-count checks."""
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -82,7 +83,9 @@ def test_bpe_train_paper_example(spark):
 
 @given(
     st.lists(
-        st.text(alphabet="abc", min_size=1, max_size=5),
+        # a non-ASCII BMP character and an astral one: the tie-break
+        # is code-point order, and train and apply split by code point
+        st.text(alphabet="abé😀", min_size=1, max_size=5),
         min_size=1,
         max_size=12,
     ),
@@ -90,7 +93,7 @@ def test_bpe_train_paper_example(spark):
 )
 @settings(**SETTINGS)
 def test_bpe_train_matches_reference(spark, words, n_merges):
-    """Distributed trainer == pure-python reference on random corpora:
+    """Trainer == pure-python reference on random corpora:
     identical merge SEQUENCE, and the rank-priority Spark encoder
     reproduces the reference's sequential-replay segmentations."""
     freqs = {}
@@ -106,6 +109,47 @@ def test_bpe_train_matches_reference(spark, words, n_merges):
         out = {r.doc_id: r.bpe_tokens for r in bpe_apply(docs, got).collect()}
         for i, w in enumerate(words):
             assert out[i] == _ref_encode(w, got), (w, got)
+
+
+def test_bpe_train_non_ascii_matches_reference(spark):
+    """A fixed corpus of emoji and accented words: one symbol per code
+    point (never a surrogate half), merges in code-point tie-break
+    order, and apply's segmentations equal the reference replay."""
+    words = ["😀😀", "😀x", "😀", "😀x", "é😀", "éé", "xé", "😀😀", "éé", "x😀", "😀x"]
+    docs = spark.createDataFrame([(1, " ".join(words))], "doc_id bigint, text string")
+    freqs = {}
+    for w in words:
+        freqs[w] = freqs.get(w, 0) + 1
+    got = bpe_train(docs, 10)
+    want, _ = _ref_train(freqs, 10)
+    assert got == want
+    # x</w> and é</w> tie at 3: "x" (U+0078) sorts before "é" (U+00E9)
+    assert got[:3] == [("😀", END_OF_WORD), ("x", END_OF_WORD), ("é", END_OF_WORD)]
+    tokens = bpe_apply(docs, got).collect()[0].bpe_tokens
+    assert tokens == [t for w in words for t in _ref_encode(w, got)]
+
+
+def test_bpe_train_spark_jobs_independent_of_merges(spark):
+    """Training launches the same Spark jobs (the word count) for 0
+    merges as for 20: the merge rounds run on the driver."""
+    sc = spark.sparkContext
+    words = ["lowest"] * 5 + ["newer"] * 4 + ["wider"] * 3 + ["stronger"] * 2 + ["widest"] * 2
+    docs = spark.createDataFrame([(1, " ".join(words))], "doc_id bigint, text string")
+    jobs = {}
+    for n in (0, 20):
+        group = f"bpe_train_jobs_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            merges = bpe_train(docs, n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the async listener bus: drain it
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(merges) == 20
+    assert jobs[0] >= 1
+    assert jobs[0] == jobs[20]
 
 
 def test_bpe_train_min_pair_count_stops_early(spark):

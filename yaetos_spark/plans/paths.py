@@ -125,6 +125,19 @@ def remove_tree(path: str, spark=None) -> None:
         shutil.rmtree(path)
 
 
+def tree_bytes(path: str, spark=None) -> int:
+    """Total size of the files under ``path``; a missing path is 0
+    (local or hadoop FS)."""
+    if _is_remote(path):
+        fs, p = _hadoop_fs(path, spark)
+        return fs.getContentSummary(p).getLength() if fs.exists(p) else 0
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _dirs, names in os.walk(path)
+        for name in names
+    )
+
+
 def _is_remote(path: str) -> bool:
     return "://" in path
 

@@ -25,13 +25,21 @@ not depend on what the session was set to.
 from __future__ import annotations
 
 import contextlib
+import math
 import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from yaetos_spark.plans.paths import list_file_names, remove_tree, rename_path
+from yaetos_spark.plans.paths import (
+    list_file_names,
+    list_subfolders,
+    remove_tree,
+    rename_path,
+    tree_bytes,
+)
+from yaetos_spark.sources.tables import _max_split_bytes
 
 BATCH_COL = "_batch_id"
 
@@ -119,8 +127,11 @@ def compact_batches(
     ``merge`` maps the folded rows (batch column dropped) to the
     history rows: identity for an append-only sink, a cell sum for a
     count-min sketch, a register max for HLL. Re-running compaction is
-    idempotent because every merge here is. File sizes come from
-    Spark's scan packing (``spark.sql.files.maxPartitionBytes``).
+    idempotent because every merge here is. The folded rows are
+    coalesced to one write task per ``spark.sql.files.maxPartitionBytes``
+    of folded input, so a fold of many small batches lands as one file
+    rather than one per batch (Spark's scan packing alone charges each
+    file ``openCostInBytes`` and keeps small files apart).
 
     A folded batch can no longer be replayed: its rows now sit in -1,
     so a replay would add them a second time (and the dedup index's
@@ -146,7 +157,15 @@ def compact_batches(
     tmp, old = out_dir + "__compact", out_dir + "__old"
     with _compaction_lock(out_dir):
         data = spark.read.parquet(out_dir)
-        fold = merge(data.where(F.col(BATCH_COL) <= int(through_batch)).drop(BATCH_COL))
+        folded_bytes = sum(
+            tree_bytes(f"{out_dir}/{name}", spark)
+            for name in list_subfolders(out_dir, spark)
+            if name.startswith(BATCH_COL + "=")
+            and int(name.split("=", 1)[1]) <= int(through_batch)
+        )
+        fold = merge(
+            data.where(F.col(BATCH_COL) <= int(through_batch)).drop(BATCH_COL)
+        ).coalesce(max(1, math.ceil(folded_bytes / _max_split_bytes(spark))))
         keep = data.where(F.col(BATCH_COL) > int(through_batch))
         written = Observation()
         (
