@@ -221,15 +221,49 @@ def test_tpch_analogs_broadcast_dims_and_push_dates(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_scale_audit_subset_runs(spark, sf_dir):
-    """The scale-audit harness (tools/scale_audit.py) is CI-runnable:
-    subset mode executes queries and records rows/sec/err without
-    touching the committed full-run artifact."""
-    mod = _load_tool("scale_audit")
+def test_scale_audit_subset_runs(spark, sf_dir, tmp_path):
+    """The scale tool's run loop (tools/scale.py) is CI-runnable: a
+    subset executes its queries and records rows/sec/err. Its session
+    guard refuses a running session, which has no event log of its own."""
+    import pytest
+
+    mod = _load_tool("scale")
     res = mod.run_audit(spark, sf_dir, ["filter_project", "text_stats"])
     assert set(res) == {"filter_project", "text_stats"}
     for r in res.values():
         assert r["err"] is None and r["rows"] > 0 and r["sec"] >= 0
+    with pytest.raises(RuntimeError, match="fresh process"):
+        mod.start_session("scale_test", str(tmp_path))
+
+
+def test_scale_audit_cli_records_bytes(sf_dir):
+    """``tools/scale.py audit`` in its own process (its own session, so
+    its own event log, with the UI off): every record carries the bytes
+    its job group read and shuffled, and a subset run prints its JSON
+    instead of writing an artifact."""
+    import json
+    import subprocess
+    import sys
+
+    artifacts = os.path.join(REPO, "artifacts")
+
+    def snapshot():
+        return {n: os.stat(os.path.join(artifacts, n)).st_mtime_ns for n in os.listdir(artifacts)}
+
+    before = snapshot()
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "scale.py"), "audit", sf_dir,
+         "filter_project", "pricing_summary"],
+        capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    recs = json.loads(out.stdout)["queries"]
+    assert set(recs) == {"filter_project", "pricing_summary"}
+    for r in recs.values():
+        assert r["err"] is None and r["input_bytes"] > 0 and r["stages"] > 0
+    assert recs["pricing_summary"]["shuffle_write_bytes"] > 0
+    assert snapshot() == before
 
 
 def test_window_capacity_check():

@@ -4,7 +4,7 @@ Sennrich-style reference (merge sequence AND resulting
 segmentations), plus encoder/contract and Spark-job-count checks."""
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from yaetos_spark.operators.tokenizer import (
@@ -55,7 +55,13 @@ def _ref_train(word_freqs, n_merges, min_pair_count=2):
 
 def _ref_encode(word, merges):
     """Sequential merge replay (subword-nmt inference style)."""
-    syms = list(word) + [END_OF_WORD]
+    return _replay(word, merges)[0]
+
+
+def _replay(word, merges):
+    """``word``'s sequential-replay segmentation and the merges that
+    changed it on the way."""
+    syms, fired = list(word) + [END_OF_WORD], set()
     for a, b in merges:
         out, i = [], 0
         while i < len(syms):
@@ -65,8 +71,10 @@ def _ref_encode(word, merges):
             else:
                 out.append(syms[i])
                 i += 1
+        if out != syms:
+            fired.add((a, b))
         syms = out
-    return syms
+    return syms, fired
 
 
 def test_bpe_train_paper_example(spark):
@@ -127,6 +135,37 @@ def test_bpe_train_non_ascii_matches_reference(spark):
     assert got[:3] == [("😀", END_OF_WORD), ("x", END_OF_WORD), ("é", END_OF_WORD)]
     tokens = bpe_apply(docs, got).collect()[0].bpe_tokens
     assert tokens == [t for w in words for t in _ref_encode(w, got)]
+
+
+@given(
+    st.lists(
+        # ASCII space and three non-ASCII Unicode spaces: only the
+        # ASCII one separates words, in training and in apply alike
+        st.text(alphabet="ab \u00a0\u2003\u3000", min_size=1, max_size=8),
+        min_size=1,
+        max_size=6,
+    ),
+    st.integers(1, 6),
+)
+@example(["ab\u00a0ab ab\u00a0ab", "\u3000 \u3000"], 4)
+@settings(**SETTINGS)
+def test_bpe_apply_fires_every_learned_merge(spark, texts, n_merges):
+    """Train and apply split words the same way (``WORD_SEP``): the
+    words ``bpe_apply`` encodes (read back from its ``</w>`` units) are
+    the training words, so replaying the merges over them fires every
+    learned merge, including merges of non-ASCII whitespace, which is
+    word-internal on both sides."""
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    merges = bpe_train(docs, n_merges)
+    words, cur = [], ""
+    for row in bpe_apply(docs, merges).collect():
+        for t in row.bpe_tokens:
+            cur += t
+            if t.endswith(END_OF_WORD):
+                words.append(cur[: -len(END_OF_WORD)])
+                cur = ""
+    fired = set().union(*(_replay(w, merges)[1] for w in words))
+    assert fired == set(merges)
 
 
 def test_bpe_train_spark_jobs_independent_of_merges(spark):

@@ -25,7 +25,7 @@ REGRESSIONS show up as artifact diffs, reviewable without re-reading
 
 (Codegen spans are NOT counted: with AQE on, the pre-execution plan is
 an ``AdaptiveSparkPlan isFinalPlan=false`` without codegen markers, and
-executing every corpus query belongs to tools/scale_audit.py, not here.)
+executing every corpus query belongs to ``tools/scale.py audit``, not here.)
 
 Usage:
     python tools/plan_audit.py [sf_dir] [query ...] [--out PATH]

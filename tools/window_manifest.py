@@ -12,7 +12,7 @@ without executing the module.
 
 Usage:
     python tools/window_manifest.py            # print to stdout
-    python tools/window_manifest.py --out WINDOW_r13.json
+    python tools/window_manifest.py --out artifacts/WINDOW_r{N}.json
 """
 
 from __future__ import annotations

@@ -42,6 +42,7 @@ LRU cache inside each batch exploits Zipf — most tokens are repeats).
 
 from __future__ import annotations
 
+import re
 from collections import defaultdict
 
 from pyspark.sql import DataFrame
@@ -51,11 +52,17 @@ from yaetos_spark.operators._guards import reserve_helper_cols
 
 END_OF_WORD = "</w>"
 
+# The word split both training and apply use: runs of ASCII whitespace
+# (Java's default ``\s``), empty tokens dropped. Any other character,
+# U+00A0 and U+3000 included, is part of a word on both sides, so every
+# merge training learns can fire when the same text is encoded.
+WORD_SEP = r"[ \t\n\x0B\f\r]+"
+
 
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
-    """(word, freq) over whitespace tokens — the only corpus-scale pass."""
+    """(word, freq) over ``WORD_SEP`` tokens — the only corpus-scale pass."""
     toks = F.filter(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
+        F.split(F.coalesce(F.col(text_col), F.lit("")), WORD_SEP),
         lambda t: t != "",
     )
     return (
@@ -187,6 +194,7 @@ def bpe_apply(
     """
     reserve_helper_cols("bpe_apply", (out_col,), docs)
     ranks = {pair: i for i, pair in enumerate(merges)}
+    split_words = re.compile(WORD_SEP).split
     fields = ", ".join(f"{name} {dtype}" for name, dtype in docs.dtypes)
     out_schema = f"{fields}, {out_col} array<string>"
 
@@ -199,7 +207,7 @@ def bpe_apply(
                     col.append([])
                     continue
                 pieces: list[str] = []
-                for w in str(text).split():
+                for w in filter(None, split_words(str(text))):
                     hit = cache.get(w)
                     if hit is None:
                         hit = _encode_word(w, ranks)

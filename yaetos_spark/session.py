@@ -15,9 +15,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults tuned for this container (local[32], 128 GiB). On a real
-# cluster these are overridden by spark-submit/cluster conf; only the
-# adaptive + timezone settings matter universally.
+# Local-mode defaults. Cores are not fixed here: the master is
+# local[n] and shuffle partitions are n, with n from SPARK_GRAFT_CPUS or
+# the host's CPU count (default_parallelism). Driver memory is the fixed
+# 16g below unless SPARK_DRIVER_MEMORY overrides it; it is not derived
+# from the host. On a real cluster these are overridden by
+# spark-submit/cluster conf; only the adaptive + timezone settings
+# matter universally.
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -36,7 +40,7 @@ _DEFAULTS = {
     # In local mode the driver JVM hosts every executor thread AND all
     # broadcast builds; Spark's 1g default dies with "Not enough memory
     # to build and broadcast" once inputs grow ~10x past sf0.1 (found
-    # by tools/scale_smoke.py). 8g survived single heavy queries at the
+    # by `tools/scale.py smoke`). 8g survived single heavy queries at the
     # 100x replica but an 18-query 100x smoke session died inside it
     # (r11: GCLocker allocation retries -> task failures -> stopped
     # context, after ~2.2 GB of dead iterative-operator checkpoint
